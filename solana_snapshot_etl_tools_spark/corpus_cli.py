@@ -49,27 +49,48 @@ arriving shards and the loop state lives at --index-out:
 
     python -m solana_snapshot_etl_tools_spark.corpus_cli \\
         ARRIVALS_DIR OUT_DIR --ingest-stream --index-out DIR \\
-        [--no-pii] [--quality Q] [--lang L] [--script-filter S,...] \\
-        [--gopher] [--fineweb] \\
+        [--source-blocklist FILE] [--html-extract [--respect-noai]] \\
+        [--normalize] [--no-pii] [--quality Q] [--lang L] \\
+        [--script-filter S,...] [--gopher] [--fineweb] \\
+        [--term-blocklist FILE [--term-max-ratio R]] \\
         [--quality-model DIR] [--drop-near-candidates] \\
+        [--discover-boilerplate [TOP]] [--boilerplate-min-df N] \\
         [--lm-reference REF.parquet | --lm-model DIR] \\
         [--lm-max-ppl P | --lm-keep-buckets head,middle] \\
-        [--embeddings EMB.parquet [--decontam-bench B.parquet \\
-         --decontam-threshold T] [--semdedup EPS [--semdedup-k K]]] \\
         [--decontam-ngrams BENCH.parquet [--decontam-k 8] \\
          [--decontam-max-overlap 0.0] [--decontam-audit]] \\
+        [--embeddings EMB.parquet [--decontam-bench B.parquet \\
+         --decontam-threshold T] [--semdedup EPS [--semdedup-k K] \\
+         [--semdedup-save DIR | --semdedup-model DIR]]] \\
         [--dsir-target T.parquet | --dsir-model DIR] \\
         [--dsir-keep N | --dsir-sample N | --dsir-sample-scale C] \\
-        [--source-blocklist FILE] [--boilerplate-min-df N] \\
         [--stratified-split lang|script [--train-pct P --val-pct V]] \\
-        [--data-card] [--profile]
+        [--data-card] [--profile] [--skew-report COLS] \\
+        [--drift-reference HIST_DIR]
 
-(The stateless cleaning tiers — PII redaction, quality/language/
-Gopher filters, the learned quality model — run unchanged on the
-stream; the LM perplexity filter and --stratified-split run
-post-drain as batch stages over the corpus accumulated so far,
-rewriting the derived split dirs each run; the remaining batch-only
-stages are rejected, never silently ignored.)
+Both modes run the same stage functions; where each runs:
+
+- ``_clean_text`` (--html-extract, --respect-noai, --normalize): batch,
+  on the input before boilerplate removal and the dedup tier; stream,
+  on each arriving batch.
+- ``_row_filters`` (--quality, --lang, --script-filter, --gopher,
+  --fineweb, --term-blocklist, --quality-model), after PII redaction:
+  batch, after the dedup tier; stream, on each arriving batch before
+  the index dedup.
+- ``_POST_FILTER_STAGES`` (--lm-*, --decontam-ngrams, --decontam-bench,
+  --dsir-*, --semdedup), through ``_run_stages``: batch, LM, n-gram
+  decontam, embedding decontam and DSIR before the source cap, then
+  SemDeDup after the index probe; stream, post-drain over the corpus
+  accumulated so far in the order LM, n-gram decontam, embedding
+  decontam, SemDeDup, DSIR.
+
+The stream's other post-drain stages read the accumulated corpus too:
+--profile and --drift-reference first (incremental, per-batch stores),
+then --discover-boilerplate and --boilerplate-min-df before the stage
+table, and --stratified-split, --data-card and --skew-report after it.
+Post-drain stages rewrite derived views (split dirs, report); the
+append-only corpus and index keep every arrival. The remaining
+batch-only stages are rejected, never silently ignored.
 
 Emits one JSON report line (stage row counts, per-split sizes, shard
 manifest sizes). Every stage is the already-tested library operator;
@@ -81,6 +102,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from typing import Callable, NamedTuple
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -881,23 +903,29 @@ def main(argv: list[str] | None = None) -> int:
             p.error("--max-epochs only makes sense with --token-budget")
         if args.max_epochs <= 0:
             p.error("--max-epochs must be > 0")
-    scripts = None
+    # list-valued flags are parsed here, once, for both modes' stages
     if args.script_filter is not None:
         from solana_snapshot_etl_tools_spark.functions.text import (
             SCRIPT_PATTERNS,
         )
 
         allowed = set(SCRIPT_PATTERNS) | {"unknown"}
-        scripts = [
+        args.script_filter = [
             s.strip().lower() for s in args.script_filter.split(",")
             if s.strip()
         ]
-        bad = sorted(set(scripts) - allowed)
+        bad = sorted(set(args.script_filter) - allowed)
         if bad:
             p.error(f"--script-filter: unknown script(s) {bad}; "
                     f"one of {sorted(allowed)}")
-        if not scripts:
+        if not args.script_filter:
             p.error("--script-filter parsed to an empty list")
+    if args.gopher_stopwords:
+        args.gopher_stopwords = [
+            s for s in args.gopher_stopwords.split(",") if s
+        ]
+    else:
+        args.gopher_stopwords = None
     if args.term_max_ratio is not None and not args.term_blocklist:
         p.error("--term-max-ratio requires --term-blocklist")
     if args.term_max_ratio is not None and args.term_max_ratio < 0:
@@ -906,21 +934,20 @@ def main(argv: list[str] | None = None) -> int:
     if args.lm_reference and args.lm_model:
         p.error("--lm-reference and --lm-model are exclusive (train a "
                 "new LM or load a saved one, not both)")
-    lm_buckets = None
     if args.lm_keep_buckets is not None:
-        lm_buckets = [
+        args.lm_keep_buckets = [
             b.strip().lower() for b in args.lm_keep_buckets.split(",")
             if b.strip()
         ]
-        bad = sorted(set(lm_buckets) - {"head", "middle", "tail"})
-        if bad or not lm_buckets:
+        bad = sorted(set(args.lm_keep_buckets) - {"head", "middle", "tail"})
+        if bad or not args.lm_keep_buckets:
             p.error(f"--lm-keep-buckets: unknown bucket(s) {bad or '(empty)'}"
                     "; comma-list of head/middle/tail")
-    n_lm_rules = (args.lm_max_ppl is not None) + (lm_buckets is not None)
+    n_lm_rules = (args.lm_max_ppl is not None) + (args.lm_keep_buckets is not None)
     if bool(args.lm_reference or args.lm_model) != (n_lm_rules == 1):
         p.error("exactly one of --lm-max-ppl/--lm-keep-buckets goes "
                 "with exactly one of --lm-reference/--lm-model")
-    if args.lm_bucket_by != "corpus" and lm_buckets is None:
+    if args.lm_bucket_by != "corpus" and args.lm_keep_buckets is None:
         p.error("--lm-bucket-by goes with --lm-keep-buckets")
     if args.lm_save and not args.lm_reference:
         p.error("--lm-save requires --lm-reference (it persists the "
@@ -1063,8 +1090,7 @@ def main(argv: list[str] | None = None) -> int:
             purge_ids,
         )
 
-        with open(args.purge_ids) as fh:
-            id_vals = [ln.strip() for ln in fh if ln.strip()]
+        id_vals = _read_lines(args.purge_ids)
         if not id_vals:
             raise SystemExit(f"--purge-ids: {args.purge_ids!r} is empty")
         # ids parse as strings; purge_ids casts them to each store's
@@ -1231,23 +1257,7 @@ def main(argv: list[str] | None = None) -> int:
         *(["source"] if need_source else []),
         *(["url"] if args.url_dedup or args.domain_quality is not None else []),
     )
-    if args.html_extract:
-        # row-preserving transform, BEFORE every text-reading stage
-        from solana_snapshot_etl_tools_spark.functions import html as HTML
-
-        if args.respect_noai:
-            # consent first: the signal lives in the raw markup the
-            # next line strips. NULL html is unjudgeable -> kept
-            docs = docs.filter(
-                ~F.coalesce(HTML.html_noai(F.col("text")), F.lit(False))
-            )
-        docs = docs.withColumn("text", HTML.html_to_text(F.col("text")))
-    if args.normalize:
-        from solana_snapshot_etl_tools_spark.functions.normalize import (
-            normalize_text,
-        )
-
-        docs = docs.withColumn("text", normalize_text(F.col("text")))
+    docs = _clean_text(docs, args)
     if args.discover_boilerplate is not None:
         # measurement stage on exactly the frame the filter would see
         _discover_boilerplate(docs, args, report)
@@ -1267,9 +1277,9 @@ def main(argv: list[str] | None = None) -> int:
             domains as DOM,
         )
 
-        with open(args.source_blocklist) as fh:
-            blocked = [ln.strip() for ln in fh if ln.strip()]
-        docs = DOM.source_blocklist_filter(docs, blocked)
+        docs = DOM.source_blocklist_filter(
+            docs, _read_lines(args.source_blocklist)
+        )
         report["n_after_blocklist"] = docs.count()
     if args.url_dedup:
         from solana_snapshot_etl_tools_spark.operators.domains import (
@@ -1322,148 +1332,11 @@ def main(argv: list[str] | None = None) -> int:
         # (the data card measures this residue) — one more cheap
         # hash-groupBy pass on the cleaned text removes it
         clean = DD.exact_dedup(clean, "doc_id", "text")
-    c = F.col("text")
-    filtered = clean.withColumn("_q", TXT.quality_score(c)).filter(
-        F.col("_q") >= args.quality
+    # the join+aggregation stages score only the row filters' survivors,
+    # and run before the source cap so cap slots go to rows they keep
+    filtered = _run_stages(
+        spark, _row_filters(clean, args), args, report, _BATCH_FILTER_ORDER
     )
-    if args.lang:
-        filtered = filtered.filter(TXT.lang_id(c) == args.lang)
-    if scripts:
-        # writing-system routing: one codegen'd projection, runs
-        # before the (less reliable) language filter's survivors feed
-        # later stages — same placement as the stream path
-        filtered = filtered.filter(TXT.dominant_script(c).isin(scripts))
-    if args.gopher:
-        from solana_snapshot_etl_tools_spark.operators.quality import (
-            gopher_quality_flags,
-        )
-
-        before = filtered.columns
-        sw = (
-            [s for s in args.gopher_stopwords.split(",") if s]
-            if args.gopher_stopwords
-            else None
-        )
-        filtered = (
-            gopher_quality_flags(filtered, stopwords=sw)
-            .filter(F.col("passes_gopher"))
-            .select(*before)
-        )
-    if args.fineweb:
-        from solana_snapshot_etl_tools_spark.operators.quality import (
-            fineweb_quality_flags,
-        )
-
-        before = filtered.columns
-        filtered = (
-            fineweb_quality_flags(filtered)
-            .filter(F.col("passes_fineweb"))
-            .select(*before)
-        )
-    if args.term_blocklist:
-        from solana_snapshot_etl_tools_spark.operators import safety as SAF
-
-        with open(args.term_blocklist) as fh:
-            terms = [ln.strip() for ln in fh if ln.strip()]
-        # the join spelling: batch mode has no reason to inherit the
-        # column variant's 10k InSet cap (real abuse lists exceed it);
-        # the stream path keeps the zero-exchange column rule
-        filtered = SAF.term_blocklist_filter(
-            filtered, terms, max_ratio=args.term_max_ratio or 0.0
-        )
-    if args.quality_model:
-        from pyspark.ml import PipelineModel
-
-        from solana_snapshot_etl_tools_spark.operators.quality_model import (
-            quality_model_filter,
-        )
-
-        filtered = quality_model_filter(
-            filtered,
-            PipelineModel.load(args.quality_model),
-            threshold=args.quality_model_threshold,
-            alpha=args.quality_model_alpha,
-            id_col="doc_id",
-        ).drop("quality_prob")
-    if args.lm_reference or args.lm_model:
-        # the CCNet recipe: an n-gram LM trained on a HIGH-QUALITY
-        # reference corpus scores the crawl; high-perplexity (unlike-
-        # the-reference) documents are dropped. Runs after the cheap
-        # heuristic filters so the LM join scores fewer rows. With
-        # --lm-model the (train-once) LM is loaded instead of rebuilt.
-        from solana_snapshot_etl_tools_spark.operators.ngram_lm import (
-            lm_load,
-            lm_save,
-            ngram_lm_train,
-            perplexity_buckets,
-            perplexity_filter,
-        )
-
-        if args.lm_model:
-            lm = lm_load(spark, args.lm_model)
-            report["lm_model"] = args.lm_model
-        else:
-            ref = spark.read.parquet(args.lm_reference).select("text")
-            lm = ngram_lm_train(
-                ref, n=args.lm_ngram, min_count=args.lm_min_count
-            )
-            # cache BEFORE saving: lm_save's parquet write then
-            # materializes the cache, and the scoring join reuses it —
-            # the training aggregation runs once, not twice
-            lm["counts"] = DD._cache_for_session(lm["counts"])
-            if args.lm_save:
-                lm_save(lm, args.lm_save)
-                report["lm_saved_to"] = args.lm_save
-        if args.lm_model:
-            # loaded models need the same run-lifetime cache (many
-            # downstream actions re-read the filter lineage); freed by
-            # the end-of-run release_session_caches
-            lm["counts"] = DD._cache_for_session(lm["counts"])
-        # the scoring pipeline (explode + count-table join + two
-        # groupBys over the corpus) must run ONCE, not once per
-        # downstream action — cache the filtered frame before counting
-        if lm_buckets is not None:
-            # the CCNet bucket rule: cutoffs from THIS corpus's own
-            # perplexity terciles — per language/script with
-            # --lm-bucket-by — keep the listed buckets (unscorable
-            # rows have a NULL bucket and drop, like perplexity_filter)
-            kept = perplexity_buckets(
-                filtered, lm, stratum_col=_lm_stratum(args)
-            ).filter(
-                F.col("ppl_bucket").isin(lm_buckets)
-            ).drop("perplexity", "ppl_bucket")
-        else:
-            kept = perplexity_filter(filtered, lm, args.lm_max_ppl)
-        filtered = DD._cache_for_session(kept)
-        report["n_after_lm_filter"] = filtered.count()
-
-    if args.decontam_ngrams:
-        # verbatim-leak decontamination: same placement rationale as
-        # the embedding variant below — both run, they catch
-        # different leaks
-        filtered = DD._cache_for_session(
-            _ngram_decontam_filter(spark, filtered, args, report)
-        )
-        report["n_after_ngram_decontam"] = filtered.count()
-
-    if args.decontam_bench:
-        # paraphrase-leak decontamination: after the LM filter (fewer
-        # rows to score), before the source cap (cap slots must not go
-        # to rows about to be dropped as contaminated)
-        filtered = DD._cache_for_session(
-            _decontam_filter(spark, filtered, args, report)
-        )
-        report["n_after_decontam"] = filtered.count()
-
-    if args.dsir_target or args.dsir_model:
-        # data SELECTION after the cleaning/decontamination filters
-        # (DSIR resamples the clean pool toward the target look) and
-        # before the source cap (anti-domination applies to what was
-        # actually selected)
-        filtered = DD._cache_for_session(
-            _dsir_select(spark, filtered, args, report)
-        )
-        report["n_after_dsir"] = filtered.count()
 
     if args.source_cap is not None:
         from solana_snapshot_etl_tools_spark.operators import (
@@ -1539,7 +1412,8 @@ def main(argv: list[str] | None = None) -> int:
     # re-reads this frame — persist it once so the dedup/redaction/
     # scoring chain runs a single time
     corpus = filtered.select(
-        "doc_id", "text", TXT.token_count(c).alias("n_tokens"), split.alias("split")
+        "doc_id", "text", TXT.token_count(F.col("text")).alias("n_tokens"),
+        split.alias("split"),
     ).persist()
     report["n_after_filters"] = corpus.count()
 
@@ -1624,13 +1498,9 @@ def main(argv: list[str] | None = None) -> int:
         flagged.unpersist()
         corpus = deduped
 
-    if args.semdedup is not None:
-        # semantic dedup BEFORE topic balancing: the balancer should
-        # sample from distinct content, not from semantic copies
-        corpus = DD._cache_for_session(
-            _semdedup_stage(spark, corpus, args, report)
-        )
-        report["n_after_semdedup"] = corpus.count()
+    # semantic dedup BEFORE topic balancing: the balancer should
+    # sample from distinct content, not from semantic copies
+    corpus = _run_stages(spark, corpus, args, report, _BATCH_CORPUS_ORDER)
 
     if args.cluster_balance is not None:
         from solana_snapshot_etl_tools_spark.operators import cluster as CL
@@ -1675,13 +1545,10 @@ def main(argv: list[str] | None = None) -> int:
         # the exact split must run on the FINAL corpus (balancing
         # after it would distort the floor-exact shares), replacing
         # the provisional hash split assigned above
-        strat = (
-            TXT.dominant_script(F.col("text"))
-            if args.stratified_split == "script"
-            else TXT.lang_id(F.col("text"))
-        )
         resplit = stratified_split(
-            corpus.drop("split").withColumn("_stratum", strat),
+            corpus.drop("split").withColumn(
+                "_stratum", _text_stratum(args.stratified_split)
+            ),
             "_stratum",
             train_pct=args.train_pct,
             val_pct=args.val_pct,
@@ -2013,30 +1880,11 @@ def main(argv: list[str] | None = None) -> int:
     if args.skew_report:
         _skew_report(corpus, args, report, src=raw)
     if args.diff_against:
-        from pyspark.errors import AnalysisException
-
         from solana_snapshot_etl_tools_spark.operators.diff import (
             diff_summary,
         )
 
-        parts = []
-        for name in ("train", "val", "test"):
-            try:
-                parts.append(
-                    spark.read.parquet(f"{args.diff_against}/{name}")
-                    .select("doc_id", "text")
-                )
-            except AnalysisException:
-                continue
-        if parts:
-            prior = parts[0]
-            for p_ in parts[1:]:
-                prior = prior.unionByName(p_)
-        else:
-            # plain parquet of (doc_id, text) — loud if neither shape
-            prior = spark.read.parquet(args.diff_against).select(
-                "doc_id", "text"
-            )
+        prior = _read_prior_run(spark, args.diff_against, ["doc_id", "text"])
         report["diff_against"] = args.diff_against
         report["diff"] = diff_summary(prior, corpus.select("doc_id", "text"))
 
@@ -2053,28 +1901,13 @@ def main(argv: list[str] | None = None) -> int:
         )
         report["drift_hist_saved"] = True
     if args.drift_against:
-        from pyspark.errors import AnalysisException
-
         from solana_snapshot_etl_tools_spark.operators.drift import (
             corpus_drift,
             drift_summary,
             drift_vs_reference,
         )
 
-        parts = []
-        for name in ("train", "val", "test"):
-            try:
-                parts.append(
-                    spark.read.parquet(f"{args.drift_against}/{name}")
-                )
-            except AnalysisException:
-                continue
-        if parts:
-            prior = parts[0]
-            for p_ in parts[1:]:
-                prior = prior.unionByName(p_, allowMissingColumns=True)
-        else:
-            prior = spark.read.parquet(args.drift_against)
+        prior = _read_prior_run(spark, args.drift_against)
         if {"feature", "bin", "n"} <= set(prior.columns):
             # a persisted --drift-save histogram: compare against the
             # kilobyte artifact, never rescanning the reference corpus
@@ -2102,18 +1935,155 @@ def main(argv: list[str] | None = None) -> int:
 
 
 
-def _lm_stratum(args):
-    """--lm-bucket-by as a stratum expression for perplexity_buckets
-    (None = corpus-global cutoffs)."""
+def _clean_text(docs, args):
+    """--html-extract (with --respect-noai) and --normalize: the
+    row-preserving text rewrites that run before every text-reading
+    stage, on the batch frame and on the stream alike."""
+    from pyspark.sql import functions as F
+
+    if args.html_extract:
+        from solana_snapshot_etl_tools_spark.functions import html as HTML
+
+        if args.respect_noai:
+            # consent first: the signal lives in the raw markup the
+            # next line strips. NULL html is unjudgeable -> kept
+            docs = docs.filter(
+                ~F.coalesce(HTML.html_noai(F.col("text")), F.lit(False))
+            )
+        docs = docs.withColumn("text", HTML.html_to_text(F.col("text")))
+    if args.normalize:
+        from solana_snapshot_etl_tools_spark.functions.normalize import (
+            normalize_text,
+        )
+
+        docs = docs.withColumn("text", normalize_text(F.col("text")))
+    return docs
+
+
+def _row_filters(docs, args):
+    """The per-document filters, in order: --quality, --lang,
+    --script-filter, --gopher, --fineweb, --term-blocklist and
+    --quality-model. Each is a column expression or a transform-only
+    model with a per-id hash keep rule, so the same chain runs on the
+    batch frame and on the stream. Only the term blocklist is spelled
+    per mode: a join in batch (no 10k-term InSet cap — real abuse lists
+    exceed it), the zero-exchange column rule on a stream."""
+    from pyspark.sql import functions as F
+
+    from solana_snapshot_etl_tools_spark.functions import text as TXT
+    from solana_snapshot_etl_tools_spark.operators import quality as QUAL
+
+    c = F.col("text")
+    docs = docs.filter(TXT.quality_score(c) >= args.quality)
+    if args.lang:
+        docs = docs.filter(TXT.lang_id(c) == args.lang)
+    if args.script_filter:
+        # writing-system routing: one codegen'd projection
+        docs = docs.filter(TXT.dominant_script(c).isin(args.script_filter))
+    cols = docs.columns
+    if args.gopher:
+        docs = (
+            QUAL.gopher_quality_flags(docs, stopwords=args.gopher_stopwords)
+            .filter(F.col("passes_gopher"))
+            .select(*cols)
+        )
+    if args.fineweb:
+        docs = (
+            QUAL.fineweb_quality_flags(docs)
+            .filter(F.col("passes_fineweb"))
+            .select(*cols)
+        )
+    if args.term_blocklist:
+        from solana_snapshot_etl_tools_spark.operators import safety as SAF
+
+        terms = _read_lines(args.term_blocklist)
+        ratio = args.term_max_ratio or 0.0
+        if docs.isStreaming:
+            docs = docs.filter(SAF.blocklist_ratio_column(c, terms) <= ratio)
+        else:
+            docs = SAF.term_blocklist_filter(docs, terms, max_ratio=ratio)
+    if args.quality_model:
+        from pyspark.ml import PipelineModel
+
+        from solana_snapshot_etl_tools_spark.operators.quality_model import (
+            quality_model_filter,
+        )
+
+        docs = quality_model_filter(
+            docs,
+            PipelineModel.load(args.quality_model),
+            threshold=args.quality_model_threshold,
+            alpha=args.quality_model_alpha,
+            id_col="doc_id",
+        ).drop("quality_prob")
+    return docs
+
+
+def _text_stratum(kind):
+    """The text's n-gram language id ('lang') or dominant writing
+    system ('script') as a stratum column for --lm-bucket-by and
+    --stratified-split; None ('corpus') means one global stratum."""
     from pyspark.sql import functions as F
 
     from solana_snapshot_etl_tools_spark.functions import text as TXT
 
-    if args.lm_bucket_by == "lang":
-        return TXT.lang_id(F.col("text"))
-    if args.lm_bucket_by == "script":
-        return TXT.dominant_script(F.col("text"))
-    return None
+    fn = {"lang": TXT.lang_id, "script": TXT.dominant_script}.get(kind)
+    return fn(F.col("text")) if fn else None
+
+
+def _read_lines(path):
+    """The non-blank, stripped lines of a list file (blocklists, ids)."""
+    with open(path) as fh:
+        return [ln.strip() for ln in fh if ln.strip()]
+
+
+def _load_lm(spark, args, report):
+    """The n-gram LM of the perplexity stage: loaded from --lm-model
+    (the CCNet train-once posture) or trained on --lm-reference and,
+    with --lm-save, persisted. Its count table is cached for the run
+    BEFORE the save, so lm_save's write materializes the cache the
+    scoring join then reuses; release_session_caches frees it."""
+    from solana_snapshot_etl_tools_spark.operators import dedup as DD
+    from solana_snapshot_etl_tools_spark.operators.ngram_lm import (
+        lm_load,
+        lm_save,
+        ngram_lm_train,
+    )
+
+    if args.lm_model:
+        lm = lm_load(spark, args.lm_model)
+        report["lm_model"] = args.lm_model
+    else:
+        ref = spark.read.parquet(args.lm_reference).select("text")
+        lm = ngram_lm_train(ref, n=args.lm_ngram, min_count=args.lm_min_count)
+    lm["counts"] = DD._cache_for_session(lm["counts"])
+    if args.lm_save:
+        lm_save(lm, args.lm_save)
+        report["lm_saved_to"] = args.lm_save
+    return lm
+
+
+def _lm_filter(spark, corpus, args, report):
+    """The --lm-reference/--lm-model stage (the CCNet recipe): drop
+    documents whose perplexity under a high-quality reference LM
+    exceeds --lm-max-ppl, or keep the --lm-keep-buckets terciles of
+    the corpus's own perplexity — per language/script with
+    --lm-bucket-by. Unscorable rows drop under either rule."""
+    from pyspark.sql import functions as F
+
+    from solana_snapshot_etl_tools_spark.operators.ngram_lm import (
+        perplexity_buckets,
+        perplexity_filter,
+    )
+
+    lm = _load_lm(spark, args, report)
+    if args.lm_keep_buckets is None:
+        return perplexity_filter(corpus, lm, args.lm_max_ppl)
+    return perplexity_buckets(
+        corpus, lm, stratum_col=_text_stratum(args.lm_bucket_by)
+    ).filter(
+        F.col("ppl_bucket").isin(args.lm_keep_buckets)
+    ).drop("perplexity", "ppl_bucket")
 
 
 def _dsir_select(spark, corpus, args, report):
@@ -2199,6 +2169,28 @@ def _discover_boilerplate(docs, args, report):
         for r in frequent_tokens(docs, support=1e-3).limit(top).collect()
     ]
 
+
+
+def _read_prior_run(spark, path, cols=("*",)):
+    """A previous run's corpus for --diff-against/--drift-against: the
+    union of its train/val/test split dirs that hold ``cols``, or, when
+    none does, ``path`` itself read as one parquet (loud if neither
+    shape)."""
+    from functools import reduce
+
+    from pyspark.errors import AnalysisException
+
+    parts = []
+    for name in ("train", "val", "test"):
+        try:
+            parts.append(spark.read.parquet(f"{path}/{name}").select(*cols))
+        except AnalysisException:
+            continue
+    if not parts:
+        return spark.read.parquet(path).select(*cols)
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    )
 
 
 def _emit_report(report, out_dir):
@@ -2447,7 +2439,6 @@ def _semdedup_stage(spark, corpus, args, report):
     )
     n_emb = emb.count()
     if n_emb == 0:
-        report["n_semdedup_dropped"] = 0
         return corpus
     prefer = getattr(args, "dedup_prefer", None)
     docs_in, drop_pref = corpus, False
@@ -2463,7 +2454,6 @@ def _semdedup_stage(spark, corpus, args, report):
                 "left",
             )
             drop_pref = True
-    before = corpus.count()
     if args.semdedup_model:
         from solana_snapshot_etl_tools_spark.operators.cluster import (
             kmeans_load,
@@ -2500,10 +2490,7 @@ def _semdedup_stage(spark, corpus, args, report):
                 docs_in, emb, k, threshold=args.semdedup,
                 prefer_col=prefer,
             )
-    if drop_pref:
-        kept = kept.drop(prefer)
-    report["n_semdedup_dropped"] = before - kept.count()
-    return kept
+    return kept.drop(prefer) if drop_pref else kept
 
 
 def _ngram_decontam_filter(spark, corpus, args, report):
@@ -2515,17 +2502,19 @@ def _ngram_decontam_filter(spark, corpus, args, report):
     from pyspark.sql import functions as F
 
     from solana_snapshot_etl_tools_spark.operators import decontam as DCN
+    from solana_snapshot_etl_tools_spark.operators import dedup as DD
 
     bench = spark.read.parquet(args.decontam_ngrams).select("text")
     bench = bench.withColumn(
         "bench_id", F.monotonically_increasing_id()
     )
-    flagged = DCN.decontaminate(
+    # cached: the flagged count and the anti-join below both read it
+    flagged = DD._cache_for_session(DCN.decontaminate(
         corpus,
         # decontaminate reads ONE id_col name on both sides
         bench.withColumnRenamed("bench_id", "doc_id"),
         id_col="doc_id", text_col="text", k=args.decontam_k,
-    )
+    ))
     dropped = flagged.filter(
         F.col("contamination") > args.decontam_max_overlap
     ).select("doc_id")
@@ -2631,6 +2620,54 @@ def _decontam_filter(spark, corpus, args, report):
     return corpus.join(flagged, "doc_id", "left_anti")
 
 
+class _Stage(NamedTuple):
+    """One post-filter stage: ``run(spark, df, args, report)`` returns
+    the kept frame when ``enabled(args)``; ``dropped_key`` names a
+    report key that receives input rows minus output rows."""
+
+    enabled: Callable
+    run: Callable
+    dropped_key: str | None = None
+
+
+# The join+aggregation stages that follow the row filters. Batch runs
+# them on the filtered frame (SemDeDup later, on the split corpus after
+# the index probe); the stream runs them post-drain over the corpus
+# accumulated so far.
+_POST_FILTER_STAGES = {
+    "lm_filter": _Stage(lambda a: bool(a.lm_reference or a.lm_model), _lm_filter),
+    "ngram_decontam": _Stage(lambda a: bool(a.decontam_ngrams), _ngram_decontam_filter),
+    "decontam": _Stage(lambda a: bool(a.decontam_bench), _decontam_filter),
+    "dsir": _Stage(lambda a: bool(a.dsir_target or a.dsir_model), _dsir_select),
+    "semdedup": _Stage(
+        lambda a: a.semdedup is not None, _semdedup_stage, "n_semdedup_dropped"
+    ),
+}
+_BATCH_FILTER_ORDER = ("lm_filter", "ngram_decontam", "decontam", "dsir")
+_BATCH_CORPUS_ORDER = ("semdedup",)
+_STREAM_ORDER = ("lm_filter", "ngram_decontam", "decontam", "semdedup", "dsir")
+
+
+def _run_stages(spark, df, args, report, order):
+    """Run the enabled stages of ``order`` over ``df``: each output is
+    cached for the run (later stages and writes re-read it) and counted
+    once into ``report["n_after_<stage>"]``. A disabled stage leaves the
+    frame and the report untouched. Stages are looked up in the module
+    table at call time."""
+    from solana_snapshot_etl_tools_spark.operators import dedup as DD
+
+    for name in order:
+        stage = _POST_FILTER_STAGES[name]
+        if not stage.enabled(args):
+            continue
+        n_in = df.count() if stage.dropped_key else None
+        df = DD._cache_for_session(stage.run(spark, df, args, report))
+        n = report[f"n_after_{name}"] = df.count()
+        if stage.dropped_key:
+            report[stage.dropped_key] = n_in - n
+    return df
+
+
 def _ingest_stream_main(args) -> int:
     """--ingest-stream: the incremental-dedup ingestion loop
     (streaming/ingest.py) over every shard currently in the DOCS
@@ -2640,6 +2677,7 @@ def _ingest_stream_main(args) -> int:
     from pyspark.sql import functions as F
 
     from solana_snapshot_etl_tools_spark.functions import text as TXT
+    from solana_snapshot_etl_tools_spark.operators import dedup as DD
     from solana_snapshot_etl_tools_spark.session import get_spark
     from solana_snapshot_etl_tools_spark.streaming.ingest import (
         ingest_dedup_stream,
@@ -2675,103 +2713,19 @@ def _ingest_stream_main(args) -> int:
             domains as DOM,
         )
 
-        with open(args.source_blocklist) as fh:
-            blocked = [ln.strip() for ln in fh if ln.strip()]
-        stream = DOM.source_blocklist_filter(stream, blocked).select(
-            "doc_id", "text"
-        )
-    # the SAME stateless cleaning tier as batch mode (HTML extraction,
-    # PII redaction, quality and language filters are pure column
-    # expressions, so they run unchanged on the stream) — silently
-    # ignoring the flags here would make --ingest-stream a trap
-    if args.html_extract:
-        from solana_snapshot_etl_tools_spark.functions import html as HTML
-
-        if args.respect_noai:
-            # consent first — the raw-markup signal, exactly as batch
-            stream = stream.filter(
-                ~F.coalesce(HTML.html_noai(F.col("text")), F.lit(False))
-            )
-        stream = stream.withColumn(
-            "text", HTML.html_to_text(F.col("text"))
-        )
-    if args.normalize:
-        from solana_snapshot_etl_tools_spark.functions.normalize import (
-            normalize_text,
-        )
-
-        stream = stream.withColumn("text", normalize_text(F.col("text")))
+        stream = DOM.source_blocklist_filter(
+            stream, _read_lines(args.source_blocklist)
+        ).select("doc_id", "text")
+    # the SAME stateless cleaning tier as batch mode: every stage in it
+    # is a pure column expression or a transform-only model, so it
+    # runs unchanged on the stream — silently ignoring the flags here
+    # would make --ingest-stream a trap
+    stream = _clean_text(stream, args)
     if not args.no_pii:
         stream = stream.select(
             "doc_id", TXT.redact_pii(F.col("text")).alias("text")
         )
-    c = F.col("text")
-    stream = stream.filter(TXT.quality_score(c) >= args.quality)
-    if args.lang:
-        stream = stream.filter(TXT.lang_id(c) == args.lang)
-    if args.script_filter:
-        # dominant_script is a pure column expression — the same
-        # writing-system routing as batch mode, stream-safe (already
-        # validated by main's argparse pass)
-        scripts = [
-            s.strip().lower() for s in args.script_filter.split(",")
-            if s.strip()
-        ]
-        stream = stream.filter(TXT.dominant_script(c).isin(scripts))
-    if args.gopher:
-        from solana_snapshot_etl_tools_spark.operators.quality import (
-            gopher_quality_flags,
-        )
-
-        sw = (
-            [s for s in args.gopher_stopwords.split(",") if s]
-            if args.gopher_stopwords
-            else None
-        )
-        before = stream.columns
-        stream = (
-            gopher_quality_flags(stream, stopwords=sw)
-            .filter(F.col("passes_gopher"))
-            .select(*before)
-        )
-    if args.fineweb:
-        # pure column expressions — stream-safe like --gopher
-        from solana_snapshot_etl_tools_spark.operators.quality import (
-            fineweb_quality_flags,
-        )
-
-        before = stream.columns
-        stream = (
-            fineweb_quality_flags(stream)
-            .filter(F.col("passes_fineweb"))
-            .select(*before)
-        )
-    if args.term_blocklist:
-        from solana_snapshot_etl_tools_spark.operators import safety as SAF
-
-        with open(args.term_blocklist) as fh:
-            terms = [ln.strip() for ln in fh if ln.strip()]
-        stream = stream.filter(
-            SAF.blocklist_ratio_column(c, terms)
-            <= (args.term_max_ratio or 0.0)
-        )
-    if args.quality_model:
-        # the learned tier is transform-only at serve time (pinned by
-        # test_score_stream_matches_batch) and the Pareto keep is a
-        # deterministic per-id hash — both run unchanged on a stream
-        from pyspark.ml import PipelineModel
-
-        from solana_snapshot_etl_tools_spark.operators.quality_model import (
-            quality_model_filter,
-        )
-
-        stream = quality_model_filter(
-            stream,
-            PipelineModel.load(args.quality_model),
-            threshold=args.quality_model_threshold,
-            alpha=args.quality_model_alpha,
-            id_col="doc_id",
-        ).drop("quality_prob")
+    stream = _row_filters(stream, args)
     q = ingest_dedup_stream(
         stream,
         args.index_out,
@@ -2808,8 +2762,6 @@ def _ingest_stream_main(args) -> int:
         # their partials under batch=N dirs (dynamic overwrite, so
         # replays rewrite identically instead of duplicating), and
         # reports the merged estimates
-        from pyspark.errors import AnalysisException
-
         from solana_snapshot_etl_tools_spark.operators.profile import (
             corpus_profile,
             merge_profiles,
@@ -2817,31 +2769,11 @@ def _ingest_stream_main(args) -> int:
         )
 
         pstore = f"{args.out_dir}/profile"
-        try:
-            done = {
-                r.batch
-                for r in spark.read.parquet(pstore)
-                .select("batch").distinct().collect()
-            }
-        except AnalysisException:
-            done = set()
-        fresh = (
-            corpus.filter(~F.col("batch").isin(sorted(done)))
-            if done
-            else corpus
-        )
+        fresh = _unlogged_batches(spark, corpus, pstore)
         if fresh.limit(1).count():
-            part = corpus_profile(
+            _write_batches(spark, corpus_profile(
                 fresh.select("doc_id", "text", "batch"), by="batch"
-            )
-            (
-                part.repartition("batch")
-                .write.partitionBy("batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(pstore)
-            )
-            spark.catalog.refreshByPath(pstore)
+            ), pstore)
         # coverage guard (profile.stale_profile_batches — the
         # profile-store twin of the bloom sidecar's batch check):
         # partials for batches the corpus no longer contains (purged
@@ -2866,8 +2798,6 @@ def _ingest_stream_main(args) -> int:
         # the log are never rescanned; dynamic overwrite keeps replays
         # idempotent). The reference is a --drift-save artifact —
         # kilobytes, never the reference corpus itself.
-        from pyspark.errors import AnalysisException
-
         from solana_snapshot_etl_tools_spark.operators.drift import (
             drift_summary,
             feature_histograms,
@@ -2881,19 +2811,7 @@ def _ingest_stream_main(args) -> int:
                 f"(feature, bin, n); got columns {ref.columns}"
             )
         dlog = f"{args.out_dir}/drift_log"
-        try:
-            done = {
-                r.batch
-                for r in spark.read.parquet(dlog)
-                .select("batch").distinct().collect()
-            }
-        except AnalysisException:
-            done = set()
-        fresh = (
-            corpus.filter(~F.col("batch").isin(sorted(done)))
-            if done
-            else corpus
-        )
+        fresh = _unlogged_batches(spark, corpus, dlog)
         feats = {
             r.feature for r in ref.select("feature").distinct().collect()
         }
@@ -2905,18 +2823,10 @@ def _ingest_stream_main(args) -> int:
         )
         if fresh.limit(1).count():
             hists = feature_histograms(fresh, lang_col=lang, by=("batch",))
-            summ = drift_summary(
+            _write_batches(spark, drift_summary(
                 histogram_drift(ref_use, hists, by=("batch",)),
                 by=("batch",),
-            )
-            (
-                summ.repartition("batch")
-                .write.partitionBy("batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(dlog)
-            )
-            spark.catalog.refreshByPath(dlog)
+            ), dlog)
         sev = {"stable": 0, "moderate": 1, "major": 2}
         worst: dict[str, dict] = {}
         for r in spark.read.parquet(dlog).collect():
@@ -2950,7 +2860,6 @@ def _ingest_stream_main(args) -> int:
         # only once their lines were already frequent at arrival time;
         # re-running the BATCH pipeline over the drained corpus gives
         # the batch ordering (strip before dedup) exactly.
-        from solana_snapshot_etl_tools_spark.operators import dedup as DD0
         from solana_snapshot_etl_tools_spark.operators.paragraphs import (
             boilerplate_filter,
         )
@@ -2959,106 +2868,17 @@ def _ingest_stream_main(args) -> int:
         report["n_boilerplate_lines_removed"] = int(
             stripped.agg(F.sum("n_removed_lines")).collect()[0][0] or 0
         )
-        corpus = DD0._cache_for_session(
+        corpus = DD._cache_for_session(
             stripped.drop("n_lines", "n_removed_lines")
         )
-    if (args.lm_reference or args.lm_model) and corpus is not None:
-        # post-drain batch stage (the --stratified-split precedent):
-        # LM scoring is a join+aggregation pipeline, so it cannot run
-        # as a stateless row filter INSIDE the stream — instead the
-        # corpus accumulated so far is scored after the drain, and
-        # every derived view below (split dirs, data card) sees only
-        # the LM-kept subset. The append-only state (OUT_DIR/corpus +
-        # the index) stays unfiltered — the split dirs are already
-        # derived views rewritten whole each run.
-        from solana_snapshot_etl_tools_spark.operators import dedup as DD
-        from solana_snapshot_etl_tools_spark.operators.ngram_lm import (
-            lm_load,
-            lm_save,
-            ngram_lm_train,
-            perplexity_buckets,
-            perplexity_filter,
-        )
-
-        if args.lm_model:
-            lm = lm_load(spark, args.lm_model)
-            report["lm_model"] = args.lm_model
-        else:
-            ref = spark.read.parquet(args.lm_reference).select("text")
-            lm = ngram_lm_train(
-                ref, n=args.lm_ngram, min_count=args.lm_min_count
-            )
-            # cache BEFORE saving: lm_save's parquet write then
-            # materializes the cache, and the scoring join reuses it —
-            # the training aggregation runs once, not twice
-            lm["counts"] = DD._cache_for_session(lm["counts"])
-            if args.lm_save:
-                lm_save(lm, args.lm_save)
-                report["lm_saved_to"] = args.lm_save
-        if args.lm_model:
-            lm["counts"] = DD._cache_for_session(lm["counts"])
-        if args.lm_keep_buckets is not None:
-            # validated by main's argparse pass before dispatch
-            lm_buckets = [
-                b.strip().lower()
-                for b in args.lm_keep_buckets.split(",")
-                if b.strip()
-            ]
-            kept = perplexity_buckets(
-                corpus, lm, stratum_col=_lm_stratum(args)
-            ).filter(
-                F.col("ppl_bucket").isin(lm_buckets)
-            ).drop("perplexity", "ppl_bucket")
-        else:
-            kept = perplexity_filter(corpus, lm, args.lm_max_ppl)
-        corpus = DD._cache_for_session(kept)
-        report["n_after_lm_filter"] = corpus.count()
-    if args.decontam_ngrams and corpus is not None:
-        # post-drain batch stage (the LM precedent): the verbatim-leak
-        # rule is an explode+join+agg pipeline, so it runs over the
-        # corpus accumulated so far; derived views see the clean
-        # subset, the append-only state stays whole
-        from solana_snapshot_etl_tools_spark.operators import dedup as DDn
-
-        corpus = DDn._cache_for_session(
-            _ngram_decontam_filter(spark, corpus, args, report)
-        )
-        report["n_after_ngram_decontam"] = corpus.count()
-    if args.decontam_bench and corpus is not None:
-        # post-drain batch stage (the LM precedent): the paraphrase-
-        # leak check needs the corpus-side embedding join, so it runs
-        # over the corpus accumulated so far; every derived view below
-        # (split dirs, data card) sees only the decontaminated subset,
-        # while the append-only state stays unfiltered
-        from solana_snapshot_etl_tools_spark.operators import dedup as DD2
-
-        corpus = DD2._cache_for_session(
-            _decontam_filter(spark, corpus, args, report)
-        )
-        report["n_after_decontam"] = corpus.count()
-    if args.semdedup is not None and corpus is not None:
-        # post-drain batch stage (the decontamination precedent):
-        # the k-means fit is a global iterative aggregation, so
-        # semantic dedup runs over the corpus accumulated so far;
-        # derived views see the deduped subset, the append-only
-        # state stays whole
-        from solana_snapshot_etl_tools_spark.operators import dedup as DDs
-
-        corpus = DDs._cache_for_session(
-            _semdedup_stage(spark, corpus.select("doc_id", "text"), args, report)
-        )
-        report["n_after_semdedup"] = corpus.count()
-    if (args.dsir_target or args.dsir_model) and corpus is not None:
-        # post-drain batch stage (the LM precedent): a join+agg
-        # selection over the corpus accumulated so far; the derived
-        # views below see the resampled subset, the append-only state
-        # stays whole
-        from solana_snapshot_etl_tools_spark.operators import dedup as DD3
-
-        corpus = DD3._cache_for_session(
-            _dsir_select(spark, corpus, args, report)
-        )
-        report["n_after_dsir"] = corpus.count()
+    if corpus is not None:
+        # the join+aggregation stages cannot run as stateless row
+        # filters INSIDE the stream, so they run post-drain as batch
+        # stages over the corpus accumulated so far: every derived view
+        # below (split dirs, data card, skew report) sees only their
+        # kept subset, while the append-only state (OUT_DIR/corpus +
+        # the index) stays whole
+        corpus = _run_stages(spark, corpus, args, report, _STREAM_ORDER)
     if args.stratified_split and corpus is not None:
         # post-drain batch stage: the exact split is a VIEW over the
         # corpus accumulated SO FAR, rewritten whole each run (the
@@ -3071,13 +2891,10 @@ def _ingest_stream_main(args) -> int:
             stratified_split,
         )
 
-        strat = (
-            TXT.dominant_script(F.col("text"))
-            if args.stratified_split == "script"
-            else TXT.lang_id(F.col("text"))
-        )
         resplit = stratified_split(
-            corpus.select("doc_id", "text").withColumn("_stratum", strat),
+            corpus.select("doc_id", "text").withColumn(
+                "_stratum", _text_stratum(args.stratified_split)
+            ),
             "_stratum",
             train_pct=args.train_pct,
             val_pct=args.val_pct,
@@ -3098,13 +2915,40 @@ def _ingest_stream_main(args) -> int:
         report["data_card"] = corpus_report(corpus.select("doc_id", "text"))
     if args.skew_report and corpus is not None:
         _skew_report(corpus, args, report)
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        release_session_caches,
-    )
-
-    release_session_caches()
+    DD.release_session_caches()
     _emit_report(report, args.out_dir)
     return 0
+
+
+def _unlogged_batches(spark, corpus, store):
+    """The stream corpus's batches absent from the batch-partitioned
+    ``store`` (profile store, drift log): a partition-listing read, so
+    batches already logged are never rescanned."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    try:
+        done = sorted({
+            r.batch
+            for r in spark.read.parquet(store).select("batch").distinct().collect()
+        })
+    except AnalysisException:
+        return corpus
+    return corpus.filter(~F.col("batch").isin(done)) if done else corpus
+
+
+def _write_batches(spark, df, store):
+    """Append per-batch rows under ``store``'s batch=N dirs with dynamic
+    partition overwrite, so a replayed batch rewrites its own rows
+    instead of duplicating them."""
+    (
+        df.repartition("batch")
+        .write.partitionBy("batch")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(store)
+    )
+    spark.catalog.refreshByPath(store)
 
 
 if __name__ == "__main__":

@@ -300,18 +300,16 @@ def test_bloom_flags_match_python_reference_exactly(spark):
     from the Spark-exported double hashes and require EXACT flag
     agreement (members and non-members alike) — pins the sizing, the
     position arithmetic, and the bit packing end-to-end."""
-    import numpy as np
-
     members = _members(spark, 800)
     probes = _members(spark, 2000, offset=500)  # overlaps members 500..799
     filt = B.bloom_build(members, "key", fpp=0.01)
     m = int(filt.select("m_bits").first().m_bits)
     k = int(filt.select("n_hashes").first().n_hashes)
+    u64 = 2**64 - 1  # uint64 wraparound IS the scheme
 
     def hashes(df):
         return {
-            r.key: (np.uint64(r._h1 & (2**64 - 1)),
-                    np.uint64(r._h2 & (2**64 - 1)))
+            r.key: (r._h1 & u64, r._h2 & u64)
             for r in df.select(
                 "key",
                 F.xxhash64("key").alias("_h1"),
@@ -319,18 +317,18 @@ def test_bloom_flags_match_python_reference_exactly(spark):
             ).collect()
         }
 
-    bits = np.zeros(m // 8, dtype=np.uint8)
-    np.seterr(over="ignore")  # uint64 wraparound IS the scheme
+    # plain Python ints: NumPy scalar arithmetic made this loop most of
+    # the test's wall time
+    bits = bytearray(m // 8)
     for h1, h2 in hashes(members).values():
         for i in range(k):
-            p = int((h1 + np.uint64(i) * h2) % np.uint64(m))
+            p = ((h1 + i * h2) & u64) % m
             bits[p // 8] |= 1 << (p % 8)
 
     want = {}
     for key, (h1, h2) in hashes(probes).items():
         want[key] = all(
-            bits[(p := int((h1 + np.uint64(i) * h2) % np.uint64(m))) // 8]
-            >> (p % 8) & 1
+            bits[(p := ((h1 + i * h2) & u64) % m) // 8] >> (p % 8) & 1
             for i in range(k)
         )
     got = {

@@ -20,6 +20,45 @@ def _run(capsys, *argv):
     return json.loads(out[-1])
 
 
+def test_stage_runner_order_counts_and_caching(spark, monkeypatch):
+    """_run_stages runs the enabled stages of its order tuple in that
+    order, each on the cached output of the one before; every stage
+    that ran writes exactly one n_after_<stage> key (plus its declared
+    dropped key); a disabled stage leaves frame and report untouched."""
+    from types import SimpleNamespace
+
+    from solana_snapshot_etl_tools_spark.operators import dedup as DD
+
+    seen = []
+
+    def keep_below(name, n):
+        def run(spark_, df, args, report):
+            seen.append((name, df))
+            return df.filter(F.col("doc_id") < n)
+
+        return run
+
+    monkeypatch.setattr(corpus_cli, "_POST_FILTER_STAGES", {
+        "a": corpus_cli._Stage(lambda a: True, keep_below("a", 3)),
+        "b": corpus_cli._Stage(lambda a: a.b_on, keep_below("b", 1)),
+        "c": corpus_cli._Stage(lambda a: True, keep_below("c", 5), "n_c_dropped"),
+    })
+    df = spark.range(10).withColumnRenamed("id", "doc_id")
+    off = SimpleNamespace(b_on=False)
+    try:
+        report = {}
+        assert corpus_cli._run_stages(spark, df, off, report, ("b",)) is df
+        assert report == {} and seen == []
+
+        out = corpus_cli._run_stages(spark, df, off, report, ("c", "b", "a"))
+        assert [name for name, _ in seen] == ["c", "a"]
+        assert seen[0][1] is df and seen[1][1].is_cached and out.is_cached
+        assert report == {"n_after_c": 5, "n_c_dropped": 5, "n_after_a": 3}
+        assert sorted(r.doc_id for r in out.collect()) == [0, 1, 2]
+    finally:
+        DD.release_session_caches()
+
+
 @pytest.mark.slow
 def test_document_pipeline_end_to_end(spark, tmp_path_factory, capsys):
     out = str(tmp_path_factory.mktemp("corpus_docs"))

@@ -240,27 +240,35 @@ def test_block_bands_structure_and_guards():
         DD._block_bands(5, 40)  # C(40,5) over the explode cap
 
 
+def _pair_triples(pairs):
+    """(doc_a, doc_b, hamming) set of a pairs frame, collected through
+    Arrow: Row-by-Row collect of the ~0.5M uncapped pairs cost more
+    than computing them."""
+    pdf = pairs.select("doc_a", "doc_b", "hamming").toPandas()
+    return set(
+        zip(pdf.doc_a.tolist(), pdf.doc_b.tolist(), pdf.hamming.tolist())
+    )
+
+
 def test_simhash_multiblock_banding_output_identical(spark, adversarial_docs):
     """The n_blocks=8 Manku scheme must emit EXACTLY the default
     scheme's verified pair set (pigeonhole recall is exact in both;
     the Hamming filter fixes precision) — caps off so the comparison
     is over full banding. With the star cap on, the scheme must stay
     bounded and keep the planted family connected, like the default."""
-    base = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in DD.simhash_pairs(
+    base = _pair_triples(
+        DD.simhash_pairs(
             adversarial_docs, "doc_id", "text", max_hamming=5,
             max_bucket_size=None,
-        ).collect()
-    }
+        )
+    )
     for nb in (7, 8):
-        wide = {
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in DD.simhash_pairs(
+        wide = _pair_triples(
+            DD.simhash_pairs(
                 adversarial_docs, "doc_id", "text", max_hamming=5,
                 max_bucket_size=None, n_blocks=nb,
-            ).collect()
-        }
+            )
+        )
         assert wide == base, nb
     capped = DD.simhash_pairs(
         adversarial_docs, "doc_id", "text", max_hamming=5,
@@ -273,12 +281,13 @@ def test_simhash_multiblock_banding_output_identical(spark, adversarial_docs):
 
 
 def test_minhash_kernel_matches_per_doc_reference(spark):
-    """The r17 batch-flattened signature kernel (one buffer, one key
-    pass, lexsort dedupe, segmented min — plus the sliced long-doc
-    path that bounds the mixing matrix) must stay BIT-IDENTICAL to the
-    straightforward per-document spelling on unicode, short, repeated
-    and pathologically long documents. A >2^16-window doc exercises
-    the overlapping-slice min-combine branch through Spark."""
+    """The per-document signature kernel, which scans a document past
+    2^16 windows in overlapping slices (k-1 bytes of overlap) and
+    combines the slice signatures with uint64 min, must stay
+    BIT-IDENTICAL to the straightforward whole-document spelling below
+    on unicode, short, repeated and pathologically long documents. A
+    >2^16-window doc exercises the slice min-combine branch through
+    Spark."""
     import numpy as np
 
     k, n_hashes = 3, 64

@@ -74,7 +74,10 @@ def test_normalize_text_composition_and_idempotence(spark):
     assert "ﬁle" in no_nfkc and "\x00" not in no_nfkc
 
 
-@settings(max_examples=20, deadline=None)
+# This property and test_normalize_text_idempotent_property draw few,
+# wide examples (6 lists of 20-30 texts): each example costs Spark
+# actions (pandas-UDF jobs), while a text costs almost nothing.
+@settings(max_examples=6, deadline=None)
 @given(
     st.lists(
         st.text(
@@ -84,8 +87,8 @@ def test_normalize_text_composition_and_idempotence(spark):
             ),
             max_size=40,
         ),
-        min_size=1,
-        max_size=8,
+        min_size=20,
+        max_size=30,
     )
 )
 def test_nfkc_matches_unicodedata(spark, texts):
@@ -155,7 +158,7 @@ def test_cli_normalize_streams(spark, tmp_path_factory, capsys):
     assert text.startswith("Wide fine text") and "  " not in text
 
 
-@settings(max_examples=25, deadline=None)
+@settings(max_examples=6, deadline=None)
 @given(
     st.lists(
         st.text(
@@ -164,8 +167,8 @@ def test_cli_normalize_streams(spark, tmp_path_factory, capsys):
             ),
             max_size=60,
         ),
-        min_size=1,
-        max_size=6,
+        min_size=20,
+        max_size=30,
     )
 )
 def test_normalize_text_idempotent_property(spark, texts):

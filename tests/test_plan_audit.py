@@ -39,15 +39,19 @@ NESTED_LOOP_OK = {
 }
 
 
-def _declared_plans(spark):
-    for name, fn in entry_mod.queries().items():
-        df = fn(spark, SF)
-        yield name, df._jdf.queryExecution().executedPlan().toString()
+@pytest.fixture(scope="module")
+def declared_plans(spark):
+    """Executed plan of every declared query, planned once for both
+    tests (planning the whole inventory is most of this module's cost)."""
+    return {
+        name: fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in entry_mod.queries().items()
+    }
 
 
-def test_declared_plans_have_no_antipatterns(spark):
+def test_declared_plans_have_no_antipatterns(declared_plans):
     bad: list[tuple[str, str]] = []
-    for name, plan in _declared_plans(spark):
+    for name, plan in declared_plans.items():
         if (
             "CartesianProduct" in plan
             or "BroadcastNestedLoopJoin" in plan
@@ -65,10 +69,10 @@ def test_declared_plans_have_no_antipatterns(spark):
     assert not bad, bad
 
 
-def test_whitelist_is_not_stale(spark):
+def test_whitelist_is_not_stale(declared_plans):
     """Every whitelisted query must still EXHIBIT the shape it is
     whitelisted for — a fixed query must leave the list, not ride it."""
-    plans = dict(_declared_plans(spark))
+    plans = declared_plans
     missing = [n for n in NESTED_LOOP_OK if n not in plans]
     assert not missing, f"whitelisted but not declared: {missing}"
     stale = [

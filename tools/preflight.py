@@ -19,7 +19,9 @@ Runs, in order:
 6. the bench regression gate (tools/bench_compare.py): newest recorded
    BENCH_r*.json vs the median-of-3 floor in BASELINE_BENCH.json; with
    --full-bench, additionally runs a LIVE bench at
-   $SPARK_GRAFT_SF_DIR (default sf0.1) and gates that instead.
+   $SPARK_GRAFT_SF_DIR (default sf0.1) and gates that instead;
+7. the slow capstone set (``pytest tests/ -m slow -q``) — the e2e
+   CLI and stream compositions the default gate deselects.
 
 Usage: python tools/preflight.py [--skip-bench] [--skip-plan-audit]
                                  [--full-bench]
@@ -41,7 +43,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> int:
     failures: list[str] = []
 
-    print("== 1/6 rotation gate ==", flush=True)
+    print("== 1/7 rotation gate ==", flush=True)
     r = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "check_rotation.py")],
         capture_output=True,
@@ -51,7 +53,7 @@ def main() -> int:
     if r.returncode != 0:
         failures.append("rotation gate")
 
-    print("== 2/6 entry smoke (HOSTILE env) ==", flush=True)
+    print("== 2/7 entry smoke (HOSTILE env) ==", flush=True)
     # the real hostile recipe (verify skill): cwd OUTSIDE the repo so
     # Spark workers don't inherit the driver's sys.path (catches
     # by-reference-pickled UDFs), non-UTC host TZ, and the grading
@@ -80,7 +82,7 @@ def main() -> int:
     if r.returncode != 0 or len(rows) != 2:
         failures.append("hostile entry smoke")
 
-    print("== 3/6 prefix correctness sim (sf0.01) ==", flush=True)
+    print("== 3/7 prefix correctness sim (sf0.01) ==", flush=True)
     r = subprocess.run(
         [
             sys.executable,
@@ -98,7 +100,7 @@ def main() -> int:
         failures.append("prefix correctness sim")
 
     if "--skip-bench" not in sys.argv:
-        print("== 4/6 bench contract (sf0.001) ==", flush=True)
+        print("== 4/7 bench contract (sf0.001) ==", flush=True)
         env = dict(
             os.environ,
             SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -126,7 +128,7 @@ def main() -> int:
             failures.append("bench contract")
 
     if "--skip-plan-audit" not in sys.argv:
-        print("== 5/6 plan-shape watchdog ==", flush=True)
+        print("== 5/7 plan-shape watchdog ==", flush=True)
         r = subprocess.run(
             [
                 sys.executable, "-m", "pytest",
@@ -142,7 +144,7 @@ def main() -> int:
         if r.returncode != 0:
             failures.append("plan-shape watchdog")
 
-    print("== 6/6 bench regression gate (vs median floor) ==", flush=True)
+    print("== 6/7 bench regression gate (vs median floor) ==", flush=True)
     if "--full-bench" in sys.argv:
         env = dict(
             os.environ,
@@ -177,6 +179,21 @@ def main() -> int:
     print("\n".join(tail) or r.stderr.strip()[-200:])
     if r.returncode != 0:
         failures.append("bench regression gate")
+
+    print("== 7/7 slow capstone tests ==", flush=True)
+    r = subprocess.run(
+        [
+            sys.executable, "-m", "pytest", os.path.join(REPO, "tests"),
+            "-m", "slow", "-q", "--no-header", "-p", "no:cacheprovider",
+        ],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+    )
+    tail = [ln for ln in r.stdout.splitlines() if ln.strip()][-1:]
+    print(tail[0] if tail else "slow tests produced no output")
+    if r.returncode != 0:
+        failures.append("slow capstone tests")
 
     print("PREFLIGHT:", "FAIL " + ", ".join(failures) if failures else "OK")
     return 1 if failures else 0
