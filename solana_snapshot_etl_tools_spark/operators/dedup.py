@@ -1061,29 +1061,6 @@ def simhash64(
     return base.mapInPandas(gen, out_schema)
 
 
-def _hamming_chunks(max_hamming: int) -> list[tuple[int, int]]:
-    """(shift, width) per chunk: the 64 sketch bits split into
-    ``max_hamming + 1`` near-equal disjoint chunks. Pigeonhole: a pair
-    within Hamming distance ``max_hamming`` has at most ``max_hamming``
-    differing bits, which cannot touch all ``max_hamming + 1`` chunks,
-    so the pair agrees EXACTLY on at least one chunk — banding on
-    chunk value has guaranteed 100% recall at the target distance.
-    Fewer, wider chunks than a fixed 8×8 split (6×~11 bits at the
-    default 5) mean 4-16× more bucket values per band and ~2× less
-    candidate-join output on template-heavy corpora, with provably
-    identical final output."""
-    n = max_hamming + 1
-    if not 1 <= n <= 64:
-        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
-    base, extra = divmod(64, n)
-    out, shift = [], 0
-    for i in range(n):
-        w = base + (1 if i < extra else 0)
-        out.append((shift, w))
-        shift += w
-    return out
-
-
 # explode fan-out ceiling for the multi-block scheme: C(10, 5) = 252
 # bands is the largest useful k=5 configuration; anything past ~1k
 # bands costs more in exploded rows than it saves in join selectivity
@@ -1099,23 +1076,26 @@ def _block_bands(
     ``n_blocks - max_hamming``-subset of blocks, keyed on the
     CONCATENATION of that subset's block values.
 
-    Recall is exact by pigeonhole, as in ``_hamming_chunks``: at most
-    ``max_hamming`` differing bits touch at most ``max_hamming``
-    blocks, so at least ``n_blocks - max_hamming`` blocks agree — and
-    some band keys on exactly an agreeing subset. The generalization
-    buys SELECTIVITY: at the k=5 default, ``n_blocks=8`` turns 6 bands
-    of ~11-bit keys (2k bucket values — the measured super-linear
-    asymptote of the 100x probe, where buckets saturate at n >> 2^11)
-    into C(8,5)=56 bands of 24-bit keys (16M bucket values), shrinking
-    expected candidate volume by ~2^13/9 at the cost of a ~9x wider
-    explode of 4-long rows. ``n_blocks = max_hamming + 1`` degenerates
-    to exactly the ``_hamming_chunks`` single-block scheme.
+    Recall is exact by pigeonhole: at most ``max_hamming`` differing
+    bits touch at most ``max_hamming`` blocks, so at least
+    ``n_blocks - max_hamming`` blocks agree — and some band keys on
+    exactly an agreeing subset. ``n_blocks = max_hamming + 1`` is the
+    single-block scheme: ``max_hamming + 1`` disjoint chunks, one band
+    each (6×~11 bits at the default 5 — fewest exploded rows). More
+    blocks buy SELECTIVITY: at the k=5 default, ``n_blocks=8`` turns 6
+    bands of ~11-bit keys (2k bucket values — the measured
+    super-linear asymptote of the 100x probe, where buckets saturate
+    at n >> 2^11) into C(8,5)=56 bands of 24-bit keys (16M bucket
+    values), shrinking expected candidate volume by ~2^13/9 at the
+    cost of a ~9x wider explode of 4-long rows.
 
     Returns one band per entry: the list of (shift, width) blocks
     whose values concatenate into that band's key."""
     from itertools import combinations
     from math import comb
 
+    if not 0 <= max_hamming < 64:
+        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
     if not max_hamming < n_blocks <= 64:
         raise ValueError(
             f"n_blocks must be in (max_hamming, 64], got {n_blocks} "
@@ -1136,19 +1116,92 @@ def _block_bands(
     return [list(c) for c in combinations(blocks, n_blocks - max_hamming)]
 
 
-def _band_key(blocks: list[tuple[int, int]]):
-    """Column expression concatenating the given blocks' bit values
-    out of the ``simhash`` column (single block == the plain
-    shift+mask of the legacy scheme, so the default path's plan is
-    unchanged). Total kept width is <= 64 by construction, so the
-    key always fits the long."""
-    key = None
-    for shift, width in blocks:
-        v = F.shiftrightunsigned("simhash", shift).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-        key = v if key is None else F.shiftleft(key, width).bitwiseOR(v)
-    return key
+def hamming_band_join(
+    hashes: DataFrame,
+    max_hamming: int,
+    *,
+    group_cols: tuple[str, ...] = (),
+    n_blocks: int | None = None,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Banded 64-bit Hamming self-join: ``(doc, hash[, group_cols])``
+    → distinct ``(doc_a, doc_b, hamming)`` with ``doc_a < doc_b`` and
+    ``hamming <= max_hamming``; only rows with equal ``group_cols``
+    pair. ``hash`` is a 64-bit long; null hashes never pair.
+
+    Banding is ``_block_bands(max_hamming, n_blocks or max_hamming +
+    1)`` (pigeonhole-exact recall), the equi-join runs on (group_cols,
+    band, block-key value), and ``bit_count(a XOR b)`` verifies every
+    candidate exactly. No cross join anywhere.
+
+    Buckets above ``max_bucket_size`` bypass the all-pairs join (see
+    ``_cap_hot_buckets``): their members pair with the bucket-min doc
+    instead — the rep's hash rides along via min_by and the member's
+    comes from an id join, so star pairs are verified exactly too
+    (precision stays 1.0; only recall within oversized buckets is
+    approximated, and those are precisely the near-identical families
+    a rep-based dedup collapses anyway)."""
+    hashes = hashes.filter(F.col("hash").isNotNull())
+    bands = _block_bands(max_hamming, n_blocks or max_hamming + 1)
+
+    def band_key(blocks: list[tuple[int, int]]):
+        # concatenated block values; total kept width is <= 64 by
+        # construction, so the key always fits the long. A 64-wide
+        # block's mask is all-ones = -1 in two's complement
+        # ((1 << 64) - 1 overflows LongType).
+        key = None
+        for shift, width in blocks:
+            v = F.shiftrightunsigned("hash", shift).bitwiseAND(
+                F.lit((1 << width) - 1 if width < 64 else -1)
+            )
+            key = v if key is None else F.shiftleft(key, width).bitwiseOR(v)
+        return key
+
+    keys = [*group_cols, "band", "bh"]
+    banded = hashes.select(
+        "doc",
+        "hash",
+        *group_cols,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(i).alias("band"), band_key(bl).alias("bh"))
+                    for i, bl in enumerate(bands)
+                ]
+            )
+        ).alias("e"),
+    ).select("doc", "hash", *group_cols, "e.band", "e.bh")
+    banded, star = _cap_hot_buckets(
+        banded, keys, max_bucket_size, "star", rep_extra={"ha": "hash"}
+    )
+    a = banded.select(F.col("doc").alias("doc_a"), F.col("hash").alias("ha"), *keys)
+    b = banded.select(F.col("doc").alias("doc_b"), F.col("hash").alias("hb"), *keys)
+    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    # shuffle_hash, pinned: the banded frame is corpus x bands rows,
+    # but Catalyst sizes it from the 16-byte-per-doc input (a CACHED
+    # sketch relation for simhash) and does not scale the estimate
+    # through the explode — at the 100x probe the planner broadcast
+    # the 28M-row side (3.1 GiB hash relation, spilled, 68 s vs 14 s).
+    # A banded self-join must never broadcast at any scale, and
+    # sorting it (SMJ) buys nothing — shuffle-hash is the right
+    # physical join here, period.
+    pairs = (
+        a.join(b.hint("shuffle_hash"), keys)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", ham.alias("hamming"))
+    )
+    if star is not None:
+        # star pairs carry the rep's hash as ha; doc_b's hash comes
+        # from an id join against the (16 bytes/doc) input
+        star_pairs = star.join(
+            hashes.select(F.col("doc").alias("doc_b"), F.col("hash").alias("hb")),
+            "doc_b",
+        ).select("doc_a", "doc_b", ham.alias("hamming"))
+        pairs = pairs.unionByName(star_pairs)
+    return (
+        pairs.filter(F.col("hamming") <= max_hamming)  # cheap row filter first,
+        .distinct()  # then dedupe the (smaller) surviving set
+    )
 
 
 def simhash_pairs(
@@ -1157,102 +1210,44 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 5,
     max_bucket_size: int | None = SIMHASH_MAX_BUCKET,
-    hot_bucket_mode: str = "star",
-    observation=None,
     hash_family: str = "xxhash64",
     n_blocks: int | None = None,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming:
-    block banding (pigeonhole-exact recall) → equi-join on
-    (band, block-key value) → exact in-row Hamming verification. No
-    cross join anywhere.
+    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming: the
+    64-bit sketch (``simhash64``) through ``hamming_band_join``.
 
     ``n_blocks`` selects the banding scheme (output-identical by the
     pigeonhole argument, verified by test):
 
-    - ``None`` (default): ``max_hamming + 1`` single-block bands
-      (``_hamming_chunks``) — fewest exploded rows, right up to
-      corpora of ~2^11 x bucket-cap docs;
-    - ``> max_hamming + 1``: Manku multi-block bands
-      (``_block_bands``) — C(n_blocks, max_hamming) bands keyed on
-      concatenated block subsets. The 100 TB setting: at the k=5
-      default the single-block keys carry only ~11 bits, so candidate
-      volume grows ~n^2/2^11 once n >> 2k (the measured super-linear
-      last decade of the r15 100x scale probe); ``n_blocks=7`` widens
-      keys to ~18 bits (2^7 x fewer random collisions for 3.5x more
-      exploded rows — the measured sweet spot: banding+join term 4.3 s
-      vs the single-block 7.5 s at the 500k-doc probe), ``n_blocks=8``
-      to 24 bits (better asymptotics, 9x explode — right once n
-      approaches 2^18 x bucket cap). The remaining wall at the probe
-      is the linear sketch stage, common to every scheme.
+    - ``None`` (default): ``max_hamming + 1`` single-block bands —
+      fewest exploded rows, right up to corpora of ~2^11 x bucket-cap
+      docs;
+    - ``> max_hamming + 1``: Manku multi-block bands (``_block_bands``)
+      — C(n_blocks, max_hamming) bands keyed on concatenated block
+      subsets. The 100 TB setting: at the k=5 default the single-block
+      keys carry only ~11 bits, so candidate volume grows ~n^2/2^11
+      once n >> 2k (the measured super-linear last decade of the r15
+      100x scale probe); ``n_blocks=7`` widens keys to ~18 bits (2^7 x
+      fewer random collisions for 3.5x more exploded rows — the
+      measured sweet spot: banding+join term 4.3 s vs the single-block
+      7.5 s at the 500k-doc probe), ``n_blocks=8`` to 24 bits (better
+      asymptotics, 9x explode — right once n approaches 2^18 x bucket
+      cap). The remaining wall at the probe is the linear sketch
+      stage, common to every scheme.
 
-    Buckets above ``max_bucket_size`` bypass the all-pairs join (see
-    ``_cap_hot_buckets``); in ``"star"`` mode their members pair with
-    the bucket-min doc instead — the rep's sketch rides along via
-    min_by so the Hamming filter still verifies star pairs exactly
-    (precision stays 1.0; only recall within oversized buckets is
-    approximated, and those are precisely the near-identical families
-    a rep-based dedup collapses anyway)."""
-    # cache the sketch frame: the banded explode below fans out to the
+    Buckets above ``max_bucket_size`` degrade to verified star pairs
+    (see ``hamming_band_join``)."""
+    # cache the sketch frame: the banded explode fans out to the
     # bucket-size aggregate, the anti-join, the star join and both
     # sides of the candidate join — without a persist each consumer
     # re-executes the Python sketch stage. 8 bytes per doc, so the
     # cache is tiny even at corpus scale.
     sk = _cache_for_session(simhash64(df, id_col, text_col, hash_family=hash_family))
-    if n_blocks is None:
-        bands = [[c] for c in _hamming_chunks(max_hamming)]
-    else:
-        bands = _block_bands(max_hamming, n_blocks)
-    banded = sk.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        _band_key(bl).alias("bh"),
-                    )
-                    for i, bl in enumerate(bands)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc", "simhash", "e.band", "e.bh")
-    banded, star = _cap_hot_buckets(
-        banded,
-        ["band", "bh"],
-        max_bucket_size,
-        hot_bucket_mode,
-        observation,
-        rep_extra={"ha": "simhash"},
-    )
-    a = banded.select(F.col("doc").alias("doc_a"), F.col("simhash").alias("ha"), "band", "bh")
-    b = banded.select(F.col("doc").alias("doc_b"), F.col("simhash").alias("hb"), "band", "bh")
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    # shuffle_hash, pinned: the banded frame is corpus x bands rows,
-    # but Catalyst sizes it from the 16-byte-per-doc CACHED sketch
-    # relation and does not scale the estimate through the explode —
-    # at the 100x probe the planner broadcast the 28M-row side (3.1
-    # GiB hash relation, spilled, 68 s vs 14 s). A banded self-join
-    # must never broadcast at any scale, and sorting it (SMJ) buys
-    # nothing — shuffle-hash is the right physical join here, period.
-    pairs = (
-        a.join(b.hint("shuffle_hash"), ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", ham.alias("hamming"))
-    )
-    if star is not None:
-        # star pairs carry the rep's sketch as ha; doc_b's sketch comes
-        # from an id join against sk (8 bytes/doc — broadcast-sized
-        # relative to the corpus it was sketched from)
-        star_pairs = star.join(
-            sk.select(F.col("doc").alias("doc_b"), F.col("simhash").alias("hb")),
-            "doc_b",
-        ).select("doc_a", "doc_b", ham.alias("hamming"))
-        pairs = pairs.unionByName(star_pairs)
-    return (
-        pairs.filter(F.col("hamming") <= max_hamming)  # cheap row filter first,
-        .distinct()  # then dedupe the (smaller) surviving set
+    return hamming_band_join(
+        sk.withColumnRenamed("simhash", "hash"),
+        max_hamming,
+        n_blocks=n_blocks,
+        max_bucket_size=max_bucket_size,
     )
 
 

@@ -15,14 +15,15 @@ minhash → banded join → verify → components):
    median with the coefficients, so the hash is stable under them;
    small pixel edits flip few bits.
 2. ``phash_near_dup_pairs``: all pairs with Hamming distance <= d,
-   WITHOUT a quadratic join — the pigeonhole band trick (the classic
-   Hamming-space analog of LSH banding, e.g. Manku et al.'s simhash
-   dedup, WWW'07 §3): split 64 bits into d+1 blocks; any pair within
-   distance d agrees on >= 1 block, so an equi-join on (block_idx,
-   block_value) finds every candidate, then ``bit_count(a XOR b) <= d``
-   verifies exactly — all JVM-side column expressions. Hot buckets
-   (flat images hash alike) reuse ``dedup._cap_hot_buckets``'s star
-   mode so no bucket is ever quadratic.
+   WITHOUT a quadratic join — ``dedup.hamming_band_join``, the same
+   banded 64-bit Hamming join SimHash uses (the pigeonhole band trick,
+   the classic Hamming-space analog of LSH banding, e.g. Manku et
+   al.'s simhash dedup, WWW'07 §3): split 64 bits into d+1 blocks; any
+   pair within distance d agrees on >= 1 block, so an equi-join on
+   (kind, block index, block value) finds every candidate, then
+   ``bit_count(a XOR b) <= d`` verifies exactly — all JVM-side column
+   expressions. Hot buckets (flat images hash alike) degrade to
+   verified star pairs so no bucket is ever quadratic.
 3. ``phash_dedup``: pairs → ``dedup.connected_components`` → the
    (media_id, keep_id) decision table, min-id canonical per family.
 
@@ -45,8 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from solana_snapshot_etl_tools_spark.operators.dedup import (
-    _cap_hot_buckets,
     connected_components,
+    hamming_band_join,
     spread_small_input,
 )
 from solana_snapshot_etl_tools_spark.operators.multimodal import (
@@ -214,47 +215,6 @@ def perceptual_hash(
     return spread_small_input(media).mapInPandas(run, PHASH_SCHEMA)
 
 
-def _block_rows(
-    hashes: DataFrame,
-    id_col: str,
-    phash_col: str,
-    n_blocks: int,
-    carry: list[str] | None = None,
-) -> DataFrame:
-    """One row per (doc, block_idx, block_val): the 64-bit hash split
-    into ``n_blocks`` contiguous bit blocks (sizes differ by <= 1) —
-    pure column expressions, no UDF. ``carry`` columns pass through
-    (e.g. ``kind`` so pairing can be restricted per media kind)."""
-    widths = [
-        HASH_BITS // n_blocks + (1 if i < HASH_BITS % n_blocks else 0)
-        for i in range(n_blocks)
-    ]
-    offs, o = [], 0
-    for w in widths:
-        offs.append(o)
-        o += w
-    # a 64-wide block's mask is all-ones = -1 in two's complement
-    # ((1 << 64) - 1 overflows LongType)
-    masks = [(1 << w) - 1 if w < HASH_BITS else -1 for w in widths]
-    blocks = F.array(
-        *[
-            F.shiftrightunsigned(F.col(phash_col), offs[i]).bitwiseAND(
-                F.lit(masks[i])
-            )
-            for i in range(n_blocks)
-        ]
-    )
-    return (
-        hashes.filter(F.col(phash_col).isNotNull())
-        .select(
-            F.col(id_col).alias("doc"),
-            F.col(phash_col).alias("_ph"),
-            *(carry or []),
-            F.posexplode(blocks).alias("block_idx", "block_val"),
-        )
-    )
-
-
 def phash_near_dup_pairs(
     hashes: DataFrame,
     id_col: str = "media_id",
@@ -272,51 +232,15 @@ def phash_near_dup_pairs(
     EQUAL kinds: a flat image and a silent audio clip both hash to 0,
     and without the restriction they would merge into one family and
     one of them would be "deduplicated" away."""
-    if not 0 <= max_hamming < HASH_BITS:
-        raise ValueError(f"max_hamming must be in [0, {HASH_BITS}), got {max_hamming}")
-    kinded = "kind" in hashes.columns
-    keys = (["kind"] if kinded else []) + ["block_idx", "block_val"]
-    banded = _block_rows(
-        hashes, id_col, phash_col, max_hamming + 1,
-        carry=["kind"] if kinded else None,
+    kind = ["kind"] if "kind" in hashes.columns else []
+    return hamming_band_join(
+        hashes.select(
+            F.col(id_col).alias("doc"), F.col(phash_col).alias("hash"), *kind
+        ),
+        max_hamming,
+        group_cols=tuple(kind),
+        max_bucket_size=max_bucket_size,
     )
-    cool, star = _cap_hot_buckets(
-        banded,
-        keys,
-        max_bucket_size,
-        "star",
-        rep_extra={"_ph_a": "_ph"},
-    )
-    left = cool.select(
-        *keys, F.col("doc").alias("doc_a"), F.col("_ph").alias("_ph_a")
-    )
-    right = cool.select(
-        *keys, F.col("doc").alias("doc_b"), F.col("_ph").alias("_ph_b")
-    )
-    cand = (
-        left.join(right, keys)
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "_ph_a", "_ph_b")
-        .distinct()
-    )
-    if star is not None:
-        # star pairs carry the rep's hash; fetch the member's with one
-        # compact join (hot-bucket rows only, 16 bytes a side). The
-        # bucket keys already include kind, so star pairs are
-        # kind-homogeneous by construction.
-        member = hashes.select(
-            F.col(id_col).alias("doc_b"), F.col(phash_col).alias("_ph_b")
-        )
-        cand = cand.unionByName(
-            star.filter(F.col("doc_a") != F.col("doc_b"))
-            .join(member, "doc_b")
-            .select("doc_a", "doc_b", "_ph_a", "_ph_b")
-            .distinct()
-        )
-    ham = F.bit_count(F.col("_ph_a").bitwiseXOR(F.col("_ph_b")))
-    return cand.select(
-        "doc_a", "doc_b", ham.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def phash_dedup(
@@ -404,46 +328,21 @@ def _video_frame_matches(
 ) -> DataFrame:
     """Cross-video frame matches within ``max_hamming``: (media_a,
     frame_a, media_b, frame_b), media_a < media_b — the shared core of
-    the pair counter and the temporal aligner."""
-    if not 0 <= max_hamming < HASH_BITS:
-        raise ValueError(f"max_hamming must be in [0, {HASH_BITS}), got {max_hamming}")
-    n_blocks = max_hamming + 1
-    keyed = frame_hashes.filter(F.col("phash").isNotNull()).select(
-        F.struct("media_id", "frame_idx").alias("doc"),
-        F.col("phash").alias("_ph"),
+    the pair counter and the temporal aligner. Frames join as
+    (media_id, frame_idx) structs: struct order puts doc_a < doc_b
+    first by media_id, so dropping same-video pairs leaves exactly
+    media_a < media_b."""
+    matched = hamming_band_join(
+        frame_hashes.select(
+            F.struct("media_id", "frame_idx").alias("doc"),
+            F.col("phash").alias("hash"),
+        ),
+        max_hamming,
+        max_bucket_size=max_bucket_size,
     )
-    banded = _block_rows(keyed, "doc", "_ph", n_blocks)
-    cool, star = _cap_hot_buckets(
-        banded,
-        ["block_idx", "block_val"],
-        max_bucket_size,
-        "star",
-        rep_extra={"_ph_a": "_ph"},
-    )
-    left = cool.select(
-        "block_idx", "block_val", F.col("doc").alias("doc_a"), F.col("_ph").alias("_ph_a")
-    )
-    right = cool.select(
-        "block_idx", "block_val", F.col("doc").alias("doc_b"), F.col("_ph").alias("_ph_b")
-    )
-    cand = (
-        left.join(right, ["block_idx", "block_val"])
-        .filter(F.col("doc_a.media_id") < F.col("doc_b.media_id"))
-        .select("doc_a", "doc_b", "_ph_a", "_ph_b")
-        .distinct()
-    )
-    if star is not None:
-        member = keyed.select(
-            F.col("doc").alias("doc_b"), F.col("_ph").alias("_ph_b")
-        )
-        cand = cand.unionByName(
-            star.filter(F.col("doc_a.media_id") < F.col("doc_b.media_id"))
-            .join(member, "doc_b")
-            .select("doc_a", "doc_b", "_ph_a", "_ph_b")
-            .distinct()
-        )
-    ham = F.bit_count(F.col("_ph_a").bitwiseXOR(F.col("_ph_b")))
-    return cand.filter(ham <= max_hamming).select(
+    return matched.filter(
+        F.col("doc_a.media_id") != F.col("doc_b.media_id")
+    ).select(
         F.col("doc_a.media_id").alias("media_a"),
         F.col("doc_a.frame_idx").alias("frame_a"),
         F.col("doc_b.media_id").alias("media_b"),

@@ -55,10 +55,12 @@ from solana_snapshot_etl_tools_spark.operators.incremental import (
 
 def _read_prior(spark, path: str, batch_id: int, mk_empty):
     """The path's contents from batches strictly before ``batch_id``,
-    or the empty frame on genuine PATH_NOT_FOUND (first batch). Any
-    OTHER read failure — permissions, corrupt footer, transient FS —
-    raises: treating it as "empty corpus" would silently ingest every
-    duplicate in the batch and poison all later batches."""
+    or the empty frame on genuine PATH_NOT_FOUND (first batch) and on
+    UNABLE_TO_INFER_SCHEMA (the directory holds no data files because
+    every earlier batch kept zero documents). Any OTHER read failure —
+    permissions, corrupt footer, transient FS — raises: treating it as
+    "empty corpus" would silently ingest every duplicate in the batch
+    and poison all later batches."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -69,7 +71,11 @@ def _read_prior(spark, path: str, batch_id: int, mk_empty):
             cls = e.getCondition() or ""
         except Exception:
             pass
-        if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):
+        if (
+            "PATH_NOT_FOUND" in cls
+            or "UNABLE_TO_INFER_SCHEMA" in cls
+            or "Path does not exist" in str(e)
+        ):
             return mk_empty()
         raise
     return df.filter(F.col("batch") < batch_id).drop("batch")

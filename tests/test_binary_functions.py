@@ -4,8 +4,9 @@ from __future__ import annotations
 
 import random
 import struct
+from functools import reduce
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from solana_snapshot_etl_tools_spark.functions import b58decode, b58encode
 from solana_snapshot_etl_tools_spark.functions.binary import (
@@ -105,37 +106,29 @@ def test_le_readers_agree_with_struct(spark):
         (i, b"\x5a" * pad + struct.pack("<Q", v))
         for i, (v, pad) in enumerate(cases)
     ]
-    # the readers take a LITERAL offset, so emit one column per pad and
-    # pick the row's own pad at assert time — still one Spark action
+    # the readers take a LITERAL offset, so each pad group gets its own
+    # select at that offset; the union of the nine groups is still one
+    # Spark action, and no reader ever runs at another row's offset
     dfs = spark.createDataFrame(
         [(pad, i, b) for (i, b), (_, pad) in zip(rows, cases)],
         "pad int, i int, b binary",
     )
-    collected = dfs.select(
-        "pad",
-        "i",
-        *[
-            F.when(F.col("pad") == p, le_u64(F.col("b"), p)).alias(f"q{p}")
-            for p in range(9)
-        ],
-        *[
-            F.when(F.col("pad") == p, le_u32(F.col("b"), p)).alias(f"u{p}")
-            for p in range(9)
-        ],
-        *[
-            F.when(F.col("pad") == p, le_u16(F.col("b"), p)).alias(f"h{p}")
-            for p in range(9)
-        ],
-        *[
-            F.when(F.col("pad") == p, u8_at(F.col("b"), p)).alias(f"c{p}")
-            for p in range(9)
-        ],
-    ).collect()
+    groups = [
+        dfs.filter(F.col("pad") == p).select(
+            "i",
+            le_u64(F.col("b"), p).alias("q"),
+            le_u32(F.col("b"), p).alias("u"),
+            le_u16(F.col("b"), p).alias("h"),
+            u8_at(F.col("b"), p).alias("c"),
+        )
+        for p in range(9)
+    ]
+    collected = reduce(DataFrame.unionByName, groups).collect()
     assert len(collected) == len(cases)
     for r in collected:
         v, pad = cases[r.i]
         b = rows[r.i][1]
-        assert r[f"q{pad}"] == struct.unpack_from("<q", b, pad)[0]  # signed view
-        assert r[f"u{pad}"] == struct.unpack_from("<I", b, pad)[0]
-        assert r[f"h{pad}"] == struct.unpack_from("<H", b, pad)[0]
-        assert r[f"c{pad}"] == b[pad]
+        assert r.q == struct.unpack_from("<q", b, pad)[0]  # signed view
+        assert r.u == struct.unpack_from("<I", b, pad)[0]
+        assert r.h == struct.unpack_from("<H", b, pad)[0]
+        assert r.c == b[pad]

@@ -148,7 +148,8 @@ def test_simhash_chunking_matches_8x8_banding(spark, adversarial_docs):
     """The r4 width-11 chunk split must produce the same verified
     output as any other pigeonhole-valid banding — compare against
     max_hamming=7 (8 chunks of 8 bits, the old fixed layout) filtered
-    to ≤5."""
+    to ≤5. max_hamming=0 (one 64-bit block, whose all-ones mask must
+    not overflow LongType) pairs exactly the equal sketches."""
     new = {
         (r.doc_a, r.doc_b)
         for r in DD.simhash_pairs(
@@ -172,6 +173,22 @@ def test_simhash_chunking_matches_8x8_banding(spark, adversarial_docs):
         if bin(sketches[a] ^ sketches[b]).count("1") <= 5
     }
     assert new == old_le5
+    by_sketch = {}
+    for d, h in sketches.items():
+        by_sketch.setdefault(h, []).append(d)
+    equal = {
+        (a, b)
+        for ds in by_sketch.values()
+        for a in ds
+        for b in ds
+        if a < b
+    }
+    zero = _pair_triples(
+        DD.simhash_pairs(
+            adversarial_docs, "doc_id", "text", max_hamming=0, max_bucket_size=None
+        )
+    )
+    assert equal and zero == {(a, b, 0) for a, b in equal}
 
 
 def test_simhash_token_budget_chunking_is_invisible(spark, adversarial_docs):
@@ -194,18 +211,22 @@ def test_simhash_token_budget_chunking_is_invisible(spark, adversarial_docs):
 
 
 def test_hamming_chunks_cover_64_bits_disjointly():
+    """The single-block scheme (n_blocks = max_hamming + 1, the
+    default banding) is max_hamming + 1 one-block bands whose chunks
+    cover the 64 bits disjointly, in bit order."""
     for mh in (0, 3, 5, 7, 31, 63):
-        chunks = DD._hamming_chunks(mh)
-        assert len(chunks) == mh + 1
+        bands = DD._block_bands(mh, mh + 1)
+        assert len(bands) == mh + 1
+        assert all(len(band) == 1 for band in bands)
         covered = []
-        for shift, width in chunks:
+        for (shift, width), in bands:
             assert width >= 1
             covered.extend(range(shift, shift + width))
         assert covered == list(range(64))
     with pytest.raises(ValueError):
-        DD._hamming_chunks(64)
+        DD._block_bands(64, 65)  # max_hamming must be in [0, 63]
     with pytest.raises(ValueError):
-        DD._hamming_chunks(-1)
+        DD._block_bands(-1, 0)
 
 
 def test_block_bands_structure_and_guards():

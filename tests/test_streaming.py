@@ -272,6 +272,33 @@ def test_streaming_shard_ingestion_matches_sequential_batches(
     assert n_idx % len(got_corpus) == 0 and n_idx >= 2 * len(got_corpus)
 
 
+def test_ingest_after_empty_first_batch(spark, tmp_path):
+    """A first batch that keeps zero documents leaves index/ and sigs/
+    without data files. The next batch must read them as empty (there
+    is no prior corpus) instead of failing with UNABLE_TO_INFER_SCHEMA,
+    and its documents must land in the corpus and the index."""
+    from solana_snapshot_etl_tools_spark.streaming.ingest import (
+        process_ingest_batch,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "pack my box with five dozen liquor jugs today"),
+            (3, "sphinx of black quartz judge my solemn vow now"),
+        ],
+        "doc_id long, text string",
+    )
+    idx, corpus = str(tmp_path / "idx"), str(tmp_path / "corpus")
+    process_ingest_batch(docs.limit(0), 0, idx, corpus)
+    process_ingest_batch(docs, 1, idx, corpus)
+    got = spark.read.parquet(corpus)
+    assert sorted(r.doc_id for r in got.collect()) == [1, 2, 3]
+    assert {r.batch for r in got.select("batch").distinct().collect()} == {1}
+    indexed = spark.read.parquet(f"{idx}/index").select("doc").distinct()
+    assert sorted(r.doc for r in indexed.collect()) == [1, 2, 3]
+
+
 @pytest.mark.slow
 def test_streaming_ingestion_replay_is_idempotent(spark, tmp_path_factory):
     """Crash-replay semantics: foreachBatch is at-least-once, and a

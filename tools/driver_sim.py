@@ -3,9 +3,10 @@
 For each of the first 50 registered queries (the driver checks a
 50-query prefix in registration order), runs the Spark query and the
 DuckDB oracle at sf0.01, then compares row count, sorted column
-names, and a pandas value-hash — the same shape of check the driver
-performs (pd.util.hash_pandas_object dies on array cells, which is
-exactly the edge we need to catch locally).
+names, and a pandas value-hash (logged as ``value_hash`` so two runs
+can be compared) — the same shape of check the driver performs
+(pd.util.hash_pandas_object dies on array cells, which is exactly the
+edge we need to catch locally).
 
 Usage: python tools/driver_sim.py [n_queries] [sf_dir]
        python tools/driver_sim.py name1,name2[,...] [sf_dir]   # by name
@@ -96,6 +97,7 @@ def main() -> None:
                 sh = value_hash(canon(sdf))
                 oh = value_hash(canon(odf))
                 rec["hash_match"] = bool(sh == oh)
+                rec["value_hash"] = sh
             else:
                 rec["rows_only"] = True
         except Exception as e:  # noqa: BLE001
