@@ -10,7 +10,7 @@ import json
 import os
 import time
 
-from solana_snapshot_etl_tools_spark.session import get_spark
+from solana_snapshot_etl_tools_spark.session import get_spark, release_session_caches
 
 import __spark_entry__ as entry_mod
 
@@ -79,10 +79,6 @@ def main() -> None:
     spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
         spark.sparkContext.defaultParallelism
     ).mapInPandas(lambda it: it, "id long").count()
-
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        release_session_caches,
-    )
 
     # warm the ANN training memo once (reported, not counted in the
     # per-query timings): the bounded training-sample collect + k-means

@@ -1078,7 +1078,11 @@ def main(argv: list[str] | None = None) -> int:
     from solana_snapshot_etl_tools_spark.functions.hashing import _2_32
     from solana_snapshot_etl_tools_spark.operators import dedup as DD
     from solana_snapshot_etl_tools_spark.operators.sinks import write_training_shards
-    from solana_snapshot_etl_tools_spark.session import get_spark
+    from solana_snapshot_etl_tools_spark.session import (
+        cache_for_session,
+        get_spark,
+        release_session_caches,
+    )
 
     spark = get_spark(app_name="corpus-build", cpus=args.cpus)
     report: dict[str, object] = {"input": args.docs, "out": args.out_dir}
@@ -1350,7 +1354,7 @@ def main(argv: list[str] | None = None) -> int:
         capped = DOM.source_cap(filtered, args.source_cap)
         if mixture is None:
             capped = capped.drop("source")  # last source-keyed stage
-        filtered = DD._cache_for_session(capped)
+        filtered = cache_for_session(capped)
         report["n_after_source_cap"] = filtered.count()
 
     if mixture is not None and args.token_budget is not None:
@@ -1379,7 +1383,7 @@ def main(argv: list[str] | None = None) -> int:
         # the same stage, so both mixture modes hand the downstream
         # chain an identical schema (pinned by test_cli_mixture_
         # modes_same_schema)
-        filtered = DD._cache_for_session(
+        filtered = cache_for_session(
             apply_token_budget_plan(filtered, clamped)
             .drop("source", "epoch")
         )
@@ -1389,7 +1393,7 @@ def main(argv: list[str] | None = None) -> int:
             target_mixture_sample,
         )
 
-        filtered = DD._cache_for_session(
+        filtered = cache_for_session(
             target_mixture_sample(filtered, "source", mixture).drop(
                 "source"
             )
@@ -1928,7 +1932,7 @@ def main(argv: list[str] | None = None) -> int:
         }
 
     corpus.unpersist()
-    DD.release_session_caches()
+    release_session_caches()
     _emit_report(report, args.out_dir)
     return 0
 
@@ -2043,12 +2047,12 @@ def _load_lm(spark, args, report):
     with --lm-save, persisted. Its count table is cached for the run
     BEFORE the save, so lm_save's write materializes the cache the
     scoring join then reuses; release_session_caches frees it."""
-    from solana_snapshot_etl_tools_spark.operators import dedup as DD
     from solana_snapshot_etl_tools_spark.operators.ngram_lm import (
         lm_load,
         lm_save,
         ngram_lm_train,
     )
+    from solana_snapshot_etl_tools_spark.session import cache_for_session
 
     if args.lm_model:
         lm = lm_load(spark, args.lm_model)
@@ -2056,7 +2060,7 @@ def _load_lm(spark, args, report):
     else:
         ref = spark.read.parquet(args.lm_reference).select("text")
         lm = ngram_lm_train(ref, n=args.lm_ngram, min_count=args.lm_min_count)
-    lm["counts"] = DD._cache_for_session(lm["counts"])
+    lm["counts"] = cache_for_session(lm["counts"])
     if args.lm_save:
         lm_save(lm, args.lm_save)
         report["lm_saved_to"] = args.lm_save
@@ -2502,14 +2506,14 @@ def _ngram_decontam_filter(spark, corpus, args, report):
     from pyspark.sql import functions as F
 
     from solana_snapshot_etl_tools_spark.operators import decontam as DCN
-    from solana_snapshot_etl_tools_spark.operators import dedup as DD
+    from solana_snapshot_etl_tools_spark.session import cache_for_session
 
     bench = spark.read.parquet(args.decontam_ngrams).select("text")
     bench = bench.withColumn(
         "bench_id", F.monotonically_increasing_id()
     )
     # cached: the flagged count and the anti-join below both read it
-    flagged = DD._cache_for_session(DCN.decontaminate(
+    flagged = cache_for_session(DCN.decontaminate(
         corpus,
         # decontaminate reads ONE id_col name on both sides
         bench.withColumnRenamed("bench_id", "doc_id"),
@@ -2573,10 +2577,10 @@ def _decontam_filter(spark, corpus, args, report):
     silently dropping them would punish missing metadata."""
     from pyspark.sql import functions as F
 
-    from solana_snapshot_etl_tools_spark.operators import dedup as DD
     from solana_snapshot_etl_tools_spark.operators.decontam import (
         decontaminate_embedding,
     )
+    from solana_snapshot_etl_tools_spark.session import cache_for_session
 
     emb = (
         spark.read.parquet(args.embeddings)
@@ -2591,7 +2595,7 @@ def _decontam_filter(spark, corpus, args, report):
         report["n_decontam_flagged"] = 0
         return corpus
     dims = len(first[0])
-    flagged = DD._cache_for_session(
+    flagged = cache_for_session(
         decontaminate_embedding(
             emb,
             bench,
@@ -2654,14 +2658,14 @@ def _run_stages(spark, df, args, report, order):
     once into ``report["n_after_<stage>"]``. A disabled stage leaves the
     frame and the report untouched. Stages are looked up in the module
     table at call time."""
-    from solana_snapshot_etl_tools_spark.operators import dedup as DD
+    from solana_snapshot_etl_tools_spark.session import cache_for_session
 
     for name in order:
         stage = _POST_FILTER_STAGES[name]
         if not stage.enabled(args):
             continue
         n_in = df.count() if stage.dropped_key else None
-        df = DD._cache_for_session(stage.run(spark, df, args, report))
+        df = cache_for_session(stage.run(spark, df, args, report))
         n = report[f"n_after_{name}"] = df.count()
         if stage.dropped_key:
             report[stage.dropped_key] = n_in - n
@@ -2677,8 +2681,11 @@ def _ingest_stream_main(args) -> int:
     from pyspark.sql import functions as F
 
     from solana_snapshot_etl_tools_spark.functions import text as TXT
-    from solana_snapshot_etl_tools_spark.operators import dedup as DD
-    from solana_snapshot_etl_tools_spark.session import get_spark
+    from solana_snapshot_etl_tools_spark.session import (
+        cache_for_session,
+        get_spark,
+        release_session_caches,
+    )
     from solana_snapshot_etl_tools_spark.streaming.ingest import (
         ingest_dedup_stream,
     )
@@ -2868,7 +2875,7 @@ def _ingest_stream_main(args) -> int:
         report["n_boilerplate_lines_removed"] = int(
             stripped.agg(F.sum("n_removed_lines")).collect()[0][0] or 0
         )
-        corpus = DD._cache_for_session(
+        corpus = cache_for_session(
             stripped.drop("n_lines", "n_removed_lines")
         )
     if corpus is not None:
@@ -2915,7 +2922,7 @@ def _ingest_stream_main(args) -> int:
         report["data_card"] = corpus_report(corpus.select("doc_id", "text"))
     if args.skew_report and corpus is not None:
         _skew_report(corpus, args, report)
-    DD.release_session_caches()
+    release_session_caches()
     _emit_report(report, args.out_dir)
     return 0
 

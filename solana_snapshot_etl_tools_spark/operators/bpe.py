@@ -39,15 +39,6 @@ from pyspark.sql import DataFrame, functions as F
 EOW = "</w>"
 OOV_ID = 0
 
-# bounded, memoized like the ANN codebook fits
-_BPE_MEMO: dict = {}
-_BPE_MEMO_CAP = 4
-
-
-def clear_bpe_memo() -> None:
-    _BPE_MEMO.clear()
-
-
 def _word_freqs(docs: DataFrame, text_col: str, train_limit: int) -> dict[str, int]:
     """Driver-side word-frequency table of a bounded sample. The
     sample is `limit(train_limit)` docs (deterministic enough for a
@@ -78,15 +69,17 @@ def bpe_train(
     ``docs``. Returns the model: ``{"merges": ranked pair list,
     "alphabet": sorted sample character set}`` (the alphabet keeps
     rare unmerged characters out of OOV). Memoized per (corpus plan,
-    params)."""
-    try:
-        ck = (docs.semanticHash(), text_col)
-    except Exception:
-        ck = None
-    key = ("merges", ck, n_merges, train_limit)
-    if ck is not None and key in _BPE_MEMO:
-        return _BPE_MEMO[key]
+    params) in the session memo."""
+    from solana_snapshot_etl_tools_spark.session import memo, plan_key
 
+    return memo(
+        "merges",
+        (plan_key(docs), text_col, n_merges, train_limit),
+        lambda: _bpe_fit(docs, text_col, n_merges, train_limit),
+    )
+
+
+def _bpe_fit(docs: DataFrame, text_col: str, n_merges: int, train_limit: int) -> dict:
     freqs = _word_freqs(docs, text_col, train_limit)
     alphabet = sorted({c for w in freqs for c in w})
     # symbol sequences per distinct word, weighted by frequency
@@ -115,12 +108,7 @@ def bpe_train(
                     sym[i : i + 2] = [ab]
                 else:
                     i += 1
-    model = {"merges": merges, "alphabet": alphabet}
-    if ck is not None:
-        if len(_BPE_MEMO) >= _BPE_MEMO_CAP:
-            del _BPE_MEMO[next(iter(_BPE_MEMO))]
-        _BPE_MEMO[key] = model
-    return model
+    return {"merges": merges, "alphabet": alphabet}
 
 
 def bpe_vocab(model: dict) -> dict[str, int]:

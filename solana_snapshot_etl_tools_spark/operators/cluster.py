@@ -28,7 +28,7 @@ DataFrame API):
   ANN codebooks);
 - the prepared (id, vec) frame is cached for the loop and unpersisted
   before returning (caches here back no lazily-returned frame, unlike
-  the dedup session caches, so the operator can release them itself).
+  the session-registered caches, so the operator can release them itself).
 
 Float caveat, stated rather than hidden: centroid sums are float64
 but summation ORDER follows partitioning, so centroids are equal

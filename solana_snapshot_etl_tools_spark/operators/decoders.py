@@ -269,18 +269,6 @@ def _decode_metadata_udf(data: pd.Series) -> pd.DataFrame:
     )
 
 
-# (SparkContext id, data_col) → (ordered stage dicts, m expression).
-# The decode's Column tree is DataFrame-independent (every reference
-# is by name), but BUILDING it costs ~1 s of py4j chatter per call —
-# quiet-profiled at ~1.0 s build / 0.44 s execute per invocation at
-# sf0.1, the whole of the r15 bench-gate regression on this query.
-# Unresolved Columns are plain JVM expression wrappers, reusable
-# across DataFrames of one JVM, so the tree is memoized per context
-# (a restarted context gets a fresh entry; stale entries are a few
-# kilobytes of dead j-refs).
-_METADATA_EXPR_MEMO: dict = {}
-
-
 def metadata_decode(df: DataFrame, data_col: str = "data") -> DataFrame:
     """T4 as PURE Catalyst expressions — the Borsh walk of
     :func:`_parse_metadata` re-expressed with dynamic-offset column
@@ -297,10 +285,28 @@ def metadata_decode(df: DataFrame, data_col: str = "data") -> DataFrame:
     a ~10⁵-node expression that stalls analysis. CollapseProject keeps
     multiply-referenced non-cheap aliases materialized, so each
     intermediate is computed once per row. The expression tree itself
-    is memoized per SparkContext (``_METADATA_EXPR_MEMO``) — repeat
-    invocations skip the py4j construction cost entirely. Returns
-    ``df`` plus an ``m`` struct column (null = skip row)."""
-    stages, m = _metadata_decode_exprs(data_col)
+    is kept in the session memo per SparkContext — repeat invocations
+    skip the py4j construction cost entirely. Returns ``df`` plus an
+    ``m`` struct column (null = skip row)."""
+    from pyspark import SparkContext
+
+    from solana_snapshot_etl_tools_spark.session import memo
+
+    # The decode's Column tree is DataFrame-independent (every
+    # reference is by name), but BUILDING it costs ~1 s of py4j chatter
+    # per call — quiet-profiled at ~1.0 s build / 0.44 s execute per
+    # invocation at sf0.1, the whole of the r15 bench-gate regression
+    # on this query. Unresolved Columns are plain JVM expression
+    # wrappers, reusable across DataFrames of one JVM, so the (ordered
+    # stage dicts, m expression) pair is memoized per (context,
+    # data_col): a restarted context gets a fresh entry; stale entries
+    # are a few kilobytes of dead j-refs. The entry holds py4j
+    # references, so it must never be pickled.
+    stages, m = memo(
+        "metadata_exprs",
+        (id(SparkContext._active_spark_context), data_col),
+        lambda: _metadata_decode_exprs(data_col),
+    )
     s = df
     for cols in stages:
         s = s.withColumns(cols)
@@ -309,14 +315,6 @@ def metadata_decode(df: DataFrame, data_col: str = "data") -> DataFrame:
 
 
 def _metadata_decode_exprs(data_col: str):
-    from pyspark import SparkContext
-
-    ctx = SparkContext._active_spark_context
-    key = (id(ctx), data_col)
-    hit = _METADATA_EXPR_MEMO.get(key)
-    if hit is not None:
-        return hit
-
     d = F.col(data_col)
     stages: list[dict] = []
 
@@ -436,7 +434,6 @@ def _metadata_decode_exprs(data_col: str):
             F.when(c("_c_ok"), c("_ckv")).alias("collection_key"),
         ),
     )
-    _METADATA_EXPR_MEMO[key] = (stages, m)
     return stages, m
 
 
@@ -499,6 +496,18 @@ OFFCHAIN_URI_OFFSET = 119  # 1+32+32+4+32+4+10+4
 OFFCHAIN_URI_LEN = 200
 
 
+def offchain_uri() -> Column:
+    """The fixed-offset URI slice of ``data`` as a string with its NUL
+    padding stripped; NULL when the slice is not valid UTF-8. The
+    binary→string cast does not validate UTF-8, so it is gated on
+    is_valid_utf8 to match the reference's str::from_utf8(...).ok()
+    semantics. Shared by the batch table and the Geyser stream."""
+    sliced = F.substring(
+        F.col("data"), OFFCHAIN_URI_OFFSET + 1, OFFCHAIN_URI_LEN
+    ).cast("string")
+    return F.when(F.is_valid_utf8(sliced), F.regexp_replace(sliced, "\x00+$", ""))
+
+
 def offchain_uri_table(raw: DataFrame) -> DataFrame:
     """Fixed-offset URI slice; row passes only when the discriminator
     is MetadataV1 (data[0]==4), the slice exists in full, and it
@@ -507,18 +516,12 @@ def offchain_uri_table(raw: DataFrame) -> DataFrame:
     win = dedup_last_write_wins(
         raw.filter(F.col("owner") == F.lit(S.MPL_METADATA_PROGRAM_ID))
     )
-    sliced = F.substring(
-        F.col("data"), OFFCHAIN_URI_OFFSET + 1, OFFCHAIN_URI_LEN
-    ).cast("string")
-    # binary→string cast does not validate UTF-8; gate on is_valid_utf8
-    # to match the reference's str::from_utf8(...).ok() semantics
-    uri = F.when(F.is_valid_utf8(sliced), F.regexp_replace(sliced, "\x00+$", ""))
     return (
         win.filter(
             (u8_at(F.col("data"), 0) == S.METADATA_V1_KEY)
             & (F.col("data_len") >= OFFCHAIN_URI_OFFSET + OFFCHAIN_URI_LEN)
         )
-        .select("pubkey", uri.alias("uri"))
+        .select("pubkey", offchain_uri().alias("uri"))
         .filter(F.col("uri").isNotNull())
     )
 
@@ -526,14 +529,19 @@ def offchain_uri_table(raw: DataFrame) -> DataFrame:
 # --- F6: deletion events -----------------------------------------------------
 
 
-def deletion_events(raw: DataFrame) -> DataFrame:
-    """Account-closed predicate (reference selectors.rs:48-55): zero
-    lamports, empty data, system-program owner."""
-    return raw.filter(
+def deletion_event() -> Column:
+    """F6: account closed — zero lamports, empty data, system-program
+    owner (reference selectors.rs:48-55). Shared by the batch table
+    and the Geyser account selector."""
+    return (
         (F.col("lamports") == 0)
         & (F.coalesce(F.length("data"), F.lit(0)) == 0)
         & (F.col("owner") == F.lit(S.SYSTEM_PROGRAM_ID))
     )
+
+
+def deletion_events(raw: DataFrame) -> DataFrame:
+    return raw.filter(deletion_event())
 
 
 def hex_col(c: str | Column) -> Column:

@@ -21,64 +21,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from solana_snapshot_etl_tools_spark.functions.text import char_shingles, tokens
-
-# The banded-dedup operators cache small intermediate frames (minhash
-# signatures, the verified pair list, the simhash sketch frame, the
-# converged component labels) that back LAZILY returned DataFrames —
-# the operator itself cannot unpersist them before the caller
-# materializes the result. Left alone they pin executor storage for
-# the life of the session when many queries share one driver process.
-# Every such cache is registered here; call release_session_caches()
-# at a query boundary (bench.py does, between timed queries). The
-# frames are kilobytes-to-megabytes (ids + fixed-width sketches), and
-# Spark's MEMORY_AND_DISK default keeps even the unreleased case
-# evictable rather than OOM-fatal.
-_SESSION_CACHES: list[DataFrame] = []
-
-
-def _cache_for_session(df: DataFrame) -> DataFrame:
-    df = df.cache()
-    _SESSION_CACHES.append(df)
-    return df
-
-
-class _CheckpointHandle:
-    """Unpersist handle for a ``localCheckpoint(eager=True)`` frame.
-
-    A checkpointed DataFrame is backed by a persisted RDD that
-    ``df.unpersist()`` does NOT reach (no CacheManager entry), so it
-    would otherwise pin storage until the ContextCleaner happens to GC
-    it. The handle grabs the LogicalRDD's RDD via the query execution
-    (a private accessor — degraded to a no-op if the accessor moves in
-    a future Spark, leaving cleanup to the ContextCleaner). Quacks
-    like a DataFrame for ``release_session_caches``."""
-
-    def __init__(self, df: DataFrame):
-        try:
-            self._rdd = df._jdf.queryExecution().analyzed().rdd()
-        except Exception:
-            self._rdd = None
-
-    def unpersist(self, blocking: bool = False) -> None:
-        if self._rdd is not None:
-            self._rdd.unpersist(blocking)
-            self._rdd = None
-
-
-def release_session_caches() -> int:
-    """Unpersist every registered operator cache; returns how many.
-    Results already materialized by callers remain valid (unpersist
-    drops the cached blocks, not the lineage)."""
-    n = 0
-    while _SESSION_CACHES:
-        df = _SESSION_CACHES.pop()
-        try:
-            df.unpersist(blocking=True)  # sync, so storage is drained NOW
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
-
+from solana_snapshot_etl_tools_spark.session import (
+    cache_for_session,
+    checkpoint_for_session,
+    release_frame,
+)
 
 def spread_small_input(df: DataFrame) -> DataFrame:
     """Repartition up to ``defaultParallelism`` when the input has
@@ -258,14 +205,15 @@ def connected_components(
     10+ rounds (chains, unlike the star-shaped boilerplate families)
     the driver dies building the 2^rounds-node plan string before any
     executor works. Checkpointing caps every round's plan at one join
-    + one aggregate over a materialized frame. Superseded rounds'
-    checkpoint RDDs (2 longs/doc) are unpersisted as soon as the next
-    round is materialized; the FINAL label RDD backs the lazily
-    returned result and is handed to the session registry — note that
-    unlike a plain cache, releasing a checkpoint leaves nothing to
-    recompute from, so after ``release_session_caches()`` the returned
-    frame cannot be re-materialized (rerun the operator; results a
-    caller already collected stay valid)."""
+    + one aggregate over a materialized frame. Every round is
+    registered with the session cache registry; a superseded round's
+    checkpoint RDD (2 longs/doc) is released as soon as the next round
+    is materialized, and the FINAL label RDD, which backs the lazily
+    returned result (and, after an error, the failed round's frames),
+    stays until ``release_session_caches()``. Unlike a plain cache,
+    releasing a checkpoint leaves nothing to recompute from, so after
+    the release the returned frame cannot be re-materialized (rerun
+    the operator; results a caller already collected stay valid)."""
     edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     edges = (
         edges.unionByName(
@@ -274,12 +222,9 @@ def connected_components(
         .distinct()
         .cache()
     )
-    labels = (
-        df.select(F.col(id_col).alias("a"), F.col(id_col).alias("lbl"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    labels = checkpoint_for_session(
+        df.select(F.col(id_col).alias("a"), F.col(id_col).alias("lbl")).distinct()
     )
-    prev = _CheckpointHandle(labels)
     try:
         for _ in range(max_iter):
             nbr = edges.join(
@@ -294,31 +239,20 @@ def connected_components(
             hop = labels.select("a", F.col("lbl").alias("_k")).join(
                 labels.select(F.col("a").alias("_k"), "lbl"), "_k"
             ).select("a", "lbl")
-            new_labels = (
+            new_labels = checkpoint_for_session(
                 labels.unionByName(nbr)
                 .unionByName(hop)
                 .groupBy("a")
                 .agg(F.min("lbl").alias("lbl"))
-            ).localCheckpoint(eager=True)
-            # grab the new checkpoint's handle BEFORE the convergence
-            # count: if that action throws, the except path must be
-            # able to free the just-materialized blocks too
-            nxt = _CheckpointHandle(new_labels)
-            try:
-                # min-propagation is monotone: a change strictly
-                # lowers a label
-                changed = (
-                    new_labels.join(
-                        labels.select("a", F.col("lbl").alias("old")), "a"
-                    )
-                    .filter(F.col("lbl") < F.col("old"))
-                    .count()
-                )
-            except BaseException:
-                nxt.unpersist(blocking=False)
-                raise
-            prev.unpersist(blocking=True)  # superseded round's blocks
-            prev = nxt
+            )
+            # min-propagation is monotone: a change strictly lowers a
+            # label
+            changed = (
+                new_labels.join(labels.select("a", F.col("lbl").alias("old")), "a")
+                .filter(F.col("lbl") < F.col("old"))
+                .count()
+            )
+            release_frame(labels)  # superseded round's blocks
             labels = new_labels
             if changed == 0:
                 break
@@ -327,12 +261,8 @@ def connected_components(
                 f"connected_components: no convergence in {max_iter} "
                 "rounds (graph diameter exceeds max_iter)"
             )
-    except BaseException:
-        prev.unpersist(blocking=False)
+    finally:
         edges.unpersist()
-        raise
-    edges.unpersist()
-    _SESSION_CACHES.append(prev)
     out = labels.select(F.col("a").alias(id_col), F.col("lbl").alias("keep_id"))
     if prefer_col is None:
         return out
@@ -791,7 +721,7 @@ def minhash_lsh_pairs(
     joins. The signature frame is cached: it feeds both the banding
     and the estimate filter.
     """
-    sig = _cache_for_session(minhash_signatures(df, id_col, text_col, k))
+    sig = cache_for_session(minhash_signatures(df, id_col, text_col, k))
     # No explicit repartition of the candidate multiset: an earlier
     # shape pinned core-count parallelism here because the inline
     # shingle-per-pair verify downstream was CPU-heavy and AQE's
@@ -869,7 +799,7 @@ def _pair_shingle_sets(
     # candidate-id union and the final sets join); without a persist
     # each one would re-execute the whole upstream candidate/estimate
     # pipeline — cache the narrow 2-id rows instead
-    pairs = _cache_for_session(pairs)
+    pairs = cache_for_session(pairs)
     ids = (
         pairs.select(F.col("doc_a").alias("_vid"))
         .unionByName(pairs.select(F.col("doc_b").alias("_vid")))
@@ -1242,7 +1172,7 @@ def simhash_pairs(
     # sides of the candidate join — without a persist each consumer
     # re-executes the Python sketch stage. 8 bytes per doc, so the
     # cache is tiny even at corpus scale.
-    sk = _cache_for_session(simhash64(df, id_col, text_col, hash_family=hash_family))
+    sk = cache_for_session(simhash64(df, id_col, text_col, hash_family=hash_family))
     return hamming_band_join(
         sk.withColumnRenamed("simhash", "hash"),
         max_hamming,

@@ -45,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from solana_snapshot_etl_tools_spark.session import cache_for_session
+
 # 1024 buckets: boundary-bucket ranking touches ~0.1% of an over-cap
 # source, while the (source, bucket) count frame stays tiny
 DEFAULT_BUCKET_BITS = 10
@@ -210,11 +212,7 @@ def source_stats(
     cap. One partial-aggregable groupBy; ``top_k`` applies a partial
     top-k (TakeOrderedAndProject over the already-aggregated one-row-
     per-source frame, never a global sort of the corpus)."""
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        _cache_for_session,
-    )
-
-    stats = _cache_for_session(
+    stats = cache_for_session(
         df.groupBy(F.col(source_col).alias("source")).agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.length(text_col)).alias("n_chars"),

@@ -40,6 +40,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from solana_snapshot_etl_tools_spark.functions import text as TXT
+from solana_snapshot_etl_tools_spark.session import cache_for_session
 
 # the paper's featurization: word unigrams + bigrams hashed to 10k
 # buckets
@@ -150,22 +151,18 @@ def dsir_fit(
     quality-model filters follow. Scoring a LATER crawl against a
     saved table uses the FIT-TIME raw distribution as the denominator
     (the standard posture; refit when the pool drifts)."""
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        _cache_for_session,
-    )
-
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
     # cache both feature frames: each has two plan consumers here
     # (the normalizer-stats aggregate and the ratio table), and the
     # raw side is reused by dsir_score's identical-plan cache hit
     # when scoring the fit pool itself. Freed by
-    # dedup.release_session_caches(); the cached frames are
+    # session.release_session_caches(); the cached frames are
     # (id, feat, cnt) triples, a fraction of the text
-    raw_feats = _cache_for_session(
+    raw_feats = cache_for_session(
         _doc_features(raw, id_col, text_col, n_buckets, salt)
     )
-    tgt_feats = _cache_for_session(
+    tgt_feats = cache_for_session(
         _doc_features(target, id_col, text_col, n_buckets, salt)
     )
     table, _ = _log_ratio_table(tgt_feats, raw_feats, n_buckets, alpha)
@@ -285,9 +282,6 @@ def dsir_top_k(
     explode/join weight computation, and document text must never
     enter the ranking plan at all. The selected ids then semi-join
     back to ``raw`` in one pass."""
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        _cache_for_session,
-    )
     from solana_snapshot_etl_tools_spark.operators.domains import source_cap
 
     if k < 1:
@@ -325,8 +319,8 @@ def dsir_top_k(
     # min wins in source_cap's order_by: negate; tokenless docs (left
     # join -> NULL weight -> NULL rank) rank LAST via the order_by
     # NULL contract. Cached: ~16 bytes/row, freed by
-    # dedup.release_session_caches()
-    narrow = _cache_for_session(
+    # session.release_session_caches()
+    narrow = cache_for_session(
         raw.select(id_col)
         .join(w, id_col, "left")
         .select(id_col, (-q).alias("_neg_q"), F.lit("all").alias("_one"))
@@ -403,13 +397,9 @@ def dsir_scale(
     every per-row decision depend only on (id, weight). Returns the
     keep-everything degenerate as ``float('inf')`` when ``n_expected``
     covers the whole scorable pool."""
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        _cache_for_session,
-    )
-
     if n_expected < 1:
         raise ValueError(f"dsir_scale needs n_expected >= 1, got {n_expected}")
-    w = _cache_for_session(
+    w = cache_for_session(
         dsir_score(raw, model, id_col, text_col).select(
             id_col, F.exp(F.col("log_weight")).alias("_w")
         )
@@ -464,10 +454,6 @@ def dsir_sample(
 
     The acceptance draw is ``u < p`` with ``u`` from
     ``xxhash64(id, seed)`` — deterministic, partition-invariant."""
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        _cache_for_session,
-    )
-
     if n_expected < 1:
         raise ValueError(f"dsir_sample needs n_expected >= 1, got {n_expected}")
     if (target is None) == (model is None):
@@ -477,7 +463,7 @@ def dsir_sample(
         )
     if model is None:
         model = dsir_fit(raw, target, id_col, text_col, n_buckets, alpha)
-    w = _cache_for_session(
+    w = cache_for_session(
         dsir_score(raw, model, id_col, text_col).select(
             id_col, F.exp(F.col("log_weight")).alias("_w")
         )

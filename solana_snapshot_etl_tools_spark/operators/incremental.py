@@ -53,10 +53,10 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 from solana_snapshot_etl_tools_spark.operators.dedup import (
     LSH_BANDS,
     N_HASHES,
-    _cache_for_session,
     banded_signature_rows,
     minhash_signatures,
 )
+from solana_snapshot_etl_tools_spark.session import cache_for_session
 
 EXACT_BAND = -1
 # same bound and philosophy as dedup.MINHASH_MAX_BUCKET: buckets up to
@@ -171,19 +171,19 @@ def dedup_against_index(
     recall, but on high-background-similarity corpora it can flag
     nearly everything (see module doc).
 
-    Scale shape: the shard is sketched ONCE (cached via the dedup
-    session registry — call ``dedup.release_session_caches()`` at a
+    Scale shape: the shard is sketched ONCE (cached via the session
+    cache registry — call ``session.release_session_caches()`` at a
     query boundary); exact probes are semi-joins/groupBys; near probes
     join the shard's band rows against witness-capped index rows and
     estimate on fixed-width sketch arrays — no shuffle ever carries
     document text, and no stage is quadratic in a bucket's size."""
-    sig_new = _cache_for_session(
+    sig_new = cache_for_session(
         minhash_signatures(new_docs, id_col, text_col, k=k, n_hashes=n_hashes)
     )
-    band_new = _cache_for_session(
+    band_new = cache_for_session(
         banded_signature_rows(sig_new, bands, n_hashes, key_name="key")
     )
-    exact_new = _cache_for_session(
+    exact_new = cache_for_session(
         new_docs.select(
             F.col(id_col).alias("doc"), F.xxhash64(text_col).alias("key")
         )

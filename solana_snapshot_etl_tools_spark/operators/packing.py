@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from solana_snapshot_etl_tools_spark.session import cache_for_session
+
 
 def pack_token_sequences(
     enc: DataFrame,
@@ -65,13 +67,9 @@ def pack_token_sequences(
     # also guarantees both passes see the SAME range boundaries (they
     # are deterministic for identical input, but identical-by-
     # construction beats identical-by-sampling). Registered in the
-    # dedup session-cache registry; bench.py releases it between timed
+    # session cache registry; bench.py releases it between timed
     # queries.
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        _cache_for_session,
-    )
-
-    d = _cache_for_session(d)
+    d = cache_for_session(d)
     # pass 1: per-range totals → driver prefix (one tiny collect)
     totals = {
         r._pid: r.tot

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from solana_snapshot_etl_tools_spark.functions.hashing import _2_32, knuth_hash32
+from solana_snapshot_etl_tools_spark.session import checkpoint_for_session
 
 
 def balanced_sample(
@@ -283,10 +284,10 @@ def stratified_split(
     driver-side (<= #ranges + #strata rows) → broadcast base offsets
     + per-stratum cut points → within-range window rank. Document
     text touches only the final id equi-join. The ranged frame is
-    localCheckpoint-ed (registered with the dedup session cache
-    registry) — materialize the result before calling
-    ``release_session_caches``, same contract as
-    ``connected_components``."""
+    localCheckpoint-ed (registered with the session cache registry,
+    ``session.checkpoint_for_session``) — materialize the result
+    before calling ``session.release_session_caches``, same contract
+    as ``connected_components``."""
     if not (0 <= train_pct <= 100 and 0 <= val_pct <= 100):
         raise ValueError("each split percentage must be in [0, 100]")
     if train_pct + val_pct > 100:
@@ -311,13 +312,7 @@ def stratified_split(
     # operator whose whole contract is exactness. localCheckpoint
     # pins one materialization (or fails loudly); the registry frees
     # the storage at the caller's next release_session_caches().
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        _CheckpointHandle,
-        _SESSION_CACHES,
-    )
-
-    d = d.localCheckpoint(eager=True)
-    _SESSION_CACHES.append(_CheckpointHandle(d))
+    d = checkpoint_for_session(d)
     # the driver-side decision table is #ranges x #strata rows — same
     # loud-cap contract as temperature_sample: the limit bounds what
     # reaches the driver, and one aggregation serves both guard and

@@ -25,95 +25,58 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from solana_snapshot_etl_tools_spark.session import load_memo, memo, plan_key, save_memo
+
 # --- training memo -----------------------------------------------------------
 # The IVF/PQ paths train kilobyte codebooks on a bounded driver-side
-# sample. Training is deterministic in (corpus, params), and one driver
-# process typically runs MANY queries against the same corpus (the
-# correctness gate alone runs 8 ANN queries), so the sample-collection
-# Spark job and the k-means fits are memoized per
-# (plan-semantics, columns, params). Keys use DataFrame.semanticHash():
-# two reads of the same parquet path share an entry; if the files were
-# rewritten mid-session the memo would be stale — call
-# clear_training_memo() (or start a new session) after mutating the
-# corpus in place. Samples are capped at a few entries (~50 MB each at
-# train_limit=100k×64d); centroids/codebooks are kilobytes.
+# sample. Training is deterministic in (corpus, params), so the
+# sample-collection Spark job ("sample", capped) and the k-means / PQ
+# fits and the tuned probe width (_FIT_KINDS) are memoized per
+# (plan-semantics, columns, params) in the session memo (session.py).
 
-_TRAINING_MEMO: dict[tuple, object] = {}
-_SAMPLE_MEMO_CAP = 4
-
-
-def clear_training_memo() -> None:
-    _TRAINING_MEMO.clear()
+_FIT_KINDS = ("coarse", "books", "ivf_nprobe")
 
 
 def save_training_memo(path: str) -> int:
-    """Persist the memo's FITS (coarse centroids / PQ codebooks —
-    kilobytes; never the sample matrices) so a later session skips
-    retraining: train once on the big cluster, ship the artifact to
-    every query job. Keys embed ``DataFrame.semanticHash()`` — stable
-    for the same read under the same Spark version; a rewritten corpus
-    or a Spark upgrade simply misses the memo and refits (correct,
-    just slower), it can never serve a wrong fit for a matching plan
-    because training is deterministic in (corpus, params). Returns the
-    number of fits saved."""
-    import pickle
-
-    fits = {k: v for k, v in _TRAINING_MEMO.items() if k[0] != "sample"}
-    with open(path, "wb") as f:
-        pickle.dump(fits, f)
-    return len(fits)
+    """Persist the memo's FITS (coarse centroids / PQ codebooks /
+    tuned probe widths — kilobytes; never the sample matrices) so a
+    later session skips retraining: train once on the big cluster,
+    ship the artifact to every query job. Keys embed the corpus plan
+    hash (``session.plan_key``) — stable for the same read under the
+    same Spark version; a rewritten corpus or a Spark upgrade simply
+    misses the memo and refits (correct, just slower), it can never
+    serve a wrong fit for a matching plan because training is
+    deterministic in (corpus, params). Returns the number of fits
+    saved."""
+    return save_memo(path, _FIT_KINDS)
 
 
 def load_training_memo(path: str) -> int:
     """Load fits persisted by :func:`save_training_memo` into the
     session memo. Returns the number of fits loaded."""
-    import pickle
-
-    with open(path, "rb") as f:
-        fits = pickle.load(f)
-    _TRAINING_MEMO.update(fits)
-    return len(fits)
+    return load_memo(path)
 
 
 def _corpus_key(emb: DataFrame, id_col: str, vec_col: str):
-    try:
-        return (emb.semanticHash(), id_col, vec_col)
-    except Exception:  # un-hashable plan (exotic sources) → no memo
-        return None
+    h = plan_key(emb)
+    return None if h is None else (h, id_col, vec_col)
 
 
 def _corpus_sample(emb: DataFrame, id_col: str, vec_col: str, train_limit: int):
     """Unit-normalized (≤train_limit × dims) float64 sample matrix of
     the corpus, memoized. Returns a (possibly 0-row) numpy array."""
-    import numpy as np
 
-    ck = _corpus_key(emb, id_col, vec_col)
-    key = ("sample", ck, train_limit) if ck is not None else None
-    if key is not None and key in _TRAINING_MEMO:
-        return _TRAINING_MEMO[key]
-    pdf = (
-        emb.select(_l2_normalize(F.col(vec_col).cast("array<double>")).alias("cv"))
-        .limit(train_limit)
-        .toPandas()
-    )
-    X = np.stack(pdf["cv"].to_numpy()) if len(pdf) else np.empty((0, 0))
-    if key is not None:
-        if sum(1 for k in _TRAINING_MEMO if k[0] == "sample") >= _SAMPLE_MEMO_CAP:
-            for k in [k for k in _TRAINING_MEMO if k[0] == "sample"][:1]:
-                del _TRAINING_MEMO[k]
-        _TRAINING_MEMO[key] = X
-    return X
+    def collect():
+        import numpy as np
 
+        pdf = (
+            emb.select(_l2_normalize(F.col(vec_col).cast("array<double>")).alias("cv"))
+            .limit(train_limit)
+            .toPandas()
+        )
+        return np.stack(pdf["cv"].to_numpy()) if len(pdf) else np.empty((0, 0))
 
-def _memo_fit(kind: str, ck, params: tuple, fit):
-    """Memoize a deterministic training fit under (kind, corpus-key,
-    params); compute directly when the corpus has no stable key."""
-    if ck is None:
-        return fit()
-    key = (kind, ck, *params)
-    if key not in _TRAINING_MEMO:
-        _TRAINING_MEMO[key] = fit()
-    return _TRAINING_MEMO[key]
+    return memo("sample", (_corpus_key(emb, id_col, vec_col), train_limit), collect)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -498,10 +461,9 @@ def ivf_assign(
             f"ivf_assign: corpus sample has {len(X)} vectors < "
             f"n_lists={n_lists}"
         )
-    C = _memo_fit(
+    C = memo(
         "coarse",
-        ck,
-        (n_lists, seed, max_iter, train_limit),
+        (ck, n_lists, seed, max_iter, train_limit),
         lambda: _train_coarse_quantizer(X, n_lists, seed, max_iter),
     )
     center_rows = [[float(x) for x in c] for c in C]
@@ -608,10 +570,9 @@ def pq_encode(
     dims = X.shape[1]
     if dims % m:
         raise ValueError(f"pq_encode: dims {dims} not divisible by m={m}")
-    books = _memo_fit(
+    books = memo(
         "books",
-        ck,
-        (m, nbits, seed, max_iter, train_limit),
+        (ck, m, nbits, seed, max_iter, train_limit),
         lambda: _train_pq_codebooks(X, m, ksub, seed, max_iter),
     )
     book_rows = books.tolist()  # plain lists ship by value in the closure
@@ -875,10 +836,9 @@ def ivf_pq_ann_topk(
         raise ValueError(f"ivf_pq_ann_topk: dims {dims} not divisible by m={m}")
     # the coarse fit shares its memo entry with plain IVF (same params
     # → same centroids); the sub-quantizers are decorrelated via seed+1
-    C = _memo_fit(
+    C = memo(
         "coarse",
-        ck,
-        (n_lists, seed, max_iter, train_limit),
+        (ck, n_lists, seed, max_iter, train_limit),
         lambda: _train_coarse_quantizer(X, n_lists, seed, max_iter),
     )
     if n_probe is None:
@@ -893,16 +853,14 @@ def ivf_pq_ann_topk(
         # max_iter is in the key because the centroids it produced are
         # the geometry being measured — two calls differing only in
         # max_iter must not share one tuned probe width
-        n_probe = _memo_fit(
+        n_probe = memo(
             "ivf_nprobe",
-            ck,
-            (n_lists, seed, max_iter, train_limit, target_recall, k),
+            (ck, n_lists, seed, max_iter, train_limit, target_recall, k),
             lambda: _tune_n_probe(X, C, target_recall, k, seed),
         )
-    books = _memo_fit(
+    books = memo(
         "books",
-        ck,
-        (m, nbits, seed + 1, max_iter, train_limit),
+        (ck, m, nbits, seed + 1, max_iter, train_limit),
         lambda: _train_pq_codebooks(X, m, ksub, seed + 1, max_iter),
     )
     C_rows, book_rows = C.tolist(), books.tolist()
@@ -1055,9 +1013,9 @@ def ivf_ann_topk(
         X = _corpus_sample(emb, id_col, vec_col, train_limit)
         # max_iter in the key: the tuned width is a property of the
         # centroids max_iter produced (same rationale as ivf_pq's memo)
-        n_probe = _memo_fit(
-            "ivf_nprobe", ck,
-            (n_lists, seed, max_iter, train_limit, target_recall, k),
+        n_probe = memo(
+            "ivf_nprobe",
+            (ck, n_lists, seed, max_iter, train_limit, target_recall, k),
             lambda: _tune_n_probe(X, centers, target_recall, k, seed),
         )
     centers_lit = F.array(

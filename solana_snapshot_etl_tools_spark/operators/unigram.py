@@ -48,14 +48,6 @@ OOV_PIECE = "<oov>"  # reserved sentinel; _seed_pieces rejects it as a piece
 WORD_MARKER = "▁"  # ▁ — SentencePiece word-begin marker
 _UNK_PENALTY = 16.0  # nats worse than the worst real piece
 
-_UNIGRAM_MEMO: dict = {}
-_UNIGRAM_MEMO_CAP = 4
-
-
-def clear_unigram_memo() -> None:
-    _UNIGRAM_MEMO.clear()
-
-
 def _seed_pieces(
     word_freqs: dict[str, int], max_piece_len: int, seed_size: int
 ) -> tuple[list[str], dict[str, float]]:
@@ -279,25 +271,35 @@ def unigram_train(
 ) -> dict:
     """Fit the unigram model on a bounded sample. Returns
     ``{"pieces": {piece: logp}, "alphabet": sorted chars,
-    "max_piece_len": int}``; memoized per (corpus plan, params)."""
+    "max_piece_len": int}``; memoized per (corpus plan, params) in the
+    session memo."""
+    from solana_snapshot_etl_tools_spark.session import memo, plan_key
+
     if vocab_size < 2:
         raise ValueError(f"vocab_size must be >= 2, got {vocab_size}")
     if not 0.0 < shrink < 1.0:
         raise ValueError(f"shrink must be in (0, 1), got {shrink}")
-    try:
-        # the public semanticHash() — the same memo-key spelling as
-        # bpe.py / similarity.py (works on Spark Connect too, unlike
-        # the _jdf internals)
-        key = (
-            docs.select(text_col).semanticHash(),
-            text_col, vocab_size, train_limit, max_piece_len,
-            em_iters, seed_factor, shrink,
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _UNIGRAM_MEMO:
-        return _UNIGRAM_MEMO[key]
+    params = (
+        text_col, vocab_size, train_limit, max_piece_len, em_iters,
+        seed_factor, shrink,
+    )
+    return memo(
+        "unigram",
+        (plan_key(docs.select(text_col)), *params),
+        lambda: _unigram_fit(docs, *params),
+    )
 
+
+def _unigram_fit(
+    docs: DataFrame,
+    text_col: str,
+    vocab_size: int,
+    train_limit: int,
+    max_piece_len: int,
+    em_iters: int,
+    seed_factor: int,
+    shrink: float,
+) -> dict:
     # SentencePiece convention: the word-begin marker is part of the
     # word the model is fit on, so word-initial pieces are learned
     # distinctly and decode can restore spacing
@@ -344,16 +346,11 @@ def unigram_train(
         kept = {p: lp for p, lp in multi[:keep_multi]}
         kept.update({p: lp for p, lp in logp.items() if len(p) == 1})
         logp = _normalize({p: math.exp(lp) for p, lp in kept.items()})
-    model = {
+    return {
         "pieces": logp,
         "alphabet": alphabet,
         "max_piece_len": max_piece_len,
     }
-    if key is not None:
-        if len(_UNIGRAM_MEMO) >= _UNIGRAM_MEMO_CAP:
-            _UNIGRAM_MEMO.pop(next(iter(_UNIGRAM_MEMO)))
-        _UNIGRAM_MEMO[key] = model
-    return model
 
 
 def unigram_vocab(model: dict) -> dict[str, int]:

@@ -17,6 +17,7 @@ from solana_snapshot_etl_tools_spark.functions import text as TXT
 from solana_snapshot_etl_tools_spark.operators import dedup as DD
 from solana_snapshot_etl_tools_spark.operators import similarity as SIM
 from solana_snapshot_etl_tools_spark.plans.relational import _t
+from solana_snapshot_etl_tools_spark.session import memo, plan_key
 
 _SW = {k: ", ".join(f"'{w}'" for w in v) for k, v in TXT.STOPWORDS.items()}
 
@@ -303,25 +304,12 @@ def q_ann_ivf_exact(spark, sf_dir):
     return _bitexact_sim_edge(ann, emb, queries, k=5)
 
 
-_REFINE_MEMO: dict = {}
-
-
 def _exhaustive_refine(emb, k: int) -> int:
     # smallest refine with k·refine ≥ corpus size (+1 for self-match).
     # The corpus count is a Spark job at CONSTRUCTION time (refine is a
     # plan parameter), so it is memoized per corpus plan — building all
     # declared queries must not launch one scan per parity query.
-    try:
-        key = (emb.semanticHash(), k)
-    except Exception:
-        key = None
-    if key is not None and key in _REFINE_MEMO:
-        return _REFINE_MEMO[key]
-    n = emb.count()
-    refine = n // k + 2
-    if key is not None:
-        _REFINE_MEMO[key] = refine
-    return refine
+    return memo("refine", (plan_key(emb), k), lambda: emb.count() // k + 2)
 
 
 def q_ann_pq_exact(spark, sf_dir):

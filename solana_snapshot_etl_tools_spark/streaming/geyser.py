@@ -18,18 +18,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from solana_snapshot_etl_tools_spark import schemas as S
+from solana_snapshot_etl_tools_spark.operators.decoders import (
+    OFFCHAIN_URI_LEN,
+    OFFCHAIN_URI_OFFSET,
+    deletion_event,
+    offchain_uri,
+)
 
 # --- selectors (F5-F10, geyser/src/selectors.rs) ----------------------------
-
-
-def deletion_event(df_cols: DataFrame | None = None) -> Column:
-    """F6: account closed — zero lamports, empty data, system owner
-    (selectors.rs:48-55)."""
-    return (
-        (F.col("lamports") == 0)
-        & (F.coalesce(F.length("data"), F.lit(0)) == 0)
-        & (F.col("owner") == F.lit(S.SYSTEM_PROGRAM_ID))
-    )
 
 
 def account_selector(
@@ -81,9 +77,6 @@ def account_update_stream(
 
 # --- ST2: derived off-chain metadata stream (fan-out 1→2) --------------------
 
-_URI_OFF = 119  # 1+32+32+4+32+4+10+4 (plugin.rs:190-195)
-_URI_LEN = 200
-
 
 def offchain_fanout_stream(
     updates: DataFrame, with_context: bool = False
@@ -96,16 +89,14 @@ def offchain_fanout_stream(
     the fields the reference's NftOffChainDataNotify envelope sends
     (serializer mod.rs:540-557); the default stays the minimal (key,
     uri) pair the driver-checked query uses."""
-    sliced = F.substring(F.col("data"), _URI_OFF + 1, _URI_LEN).cast("string")
-    uri = F.when(F.is_valid_utf8(sliced), F.regexp_replace(sliced, "\x00+$", ""))
     extra = ["slot", "is_startup"] if with_context else []
     return (
         updates.filter(
             (F.col("owner") == F.lit(S.MPL_METADATA_PROGRAM_ID))
-            & (F.length("data") >= _URI_OFF + _URI_LEN)
+            & (F.length("data") >= OFFCHAIN_URI_OFFSET + OFFCHAIN_URI_LEN)
             & (F.substring("data", 1, 1) == F.lit(bytes([S.METADATA_V1_KEY])))
         )
-        .select("key", uri.alias("uri"), *extra)
+        .select("key", offchain_uri().alias("uri"), *extra)
         .filter(F.col("uri").isNotNull())
     )
 

@@ -41,15 +41,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from solana_snapshot_etl_tools_spark.operators.dedup import (
-    release_session_caches,
-)
 from solana_snapshot_etl_tools_spark.operators.incremental import (
     build_index,
     dedup_against_index,
     kept_index_rows,
     kept_signature_rows,
     signature_table,
+)
+from solana_snapshot_etl_tools_spark.session import (
+    checkpoint_for_session,
+    release_session_caches,
 )
 
 
@@ -148,9 +149,6 @@ def process_ingest_batch(
     from solana_snapshot_etl_tools_spark.operators.bloom import (
         bloom_build,
     )
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        _CheckpointHandle,
-    )
 
     spark = batch_df.sparkSession
     index = _read_prior(
@@ -175,16 +173,17 @@ def process_ingest_batch(
     # localCheckpoint severs the file-source lineage, so every
     # downstream write reads this batch's materialized decision — or
     # fails loudly, never silently recomputes against moved state.
-    flagged = dedup_against_index(
-        batch_df,
-        index,
-        old_sigs=sigs,
-        id_col=id_col,
-        text_col=text_col,
-        threshold=threshold,
-        bloom=bloom,
-    ).localCheckpoint(eager=True)
-    handle = _CheckpointHandle(flagged)
+    flagged = checkpoint_for_session(
+        dedup_against_index(
+            batch_df,
+            index,
+            old_sigs=sigs,
+            id_col=id_col,
+            text_col=text_col,
+            threshold=threshold,
+            bloom=bloom,
+        )
+    )
     try:
         keep = ~F.col("dup_exact")
         if drop_near_candidates:
@@ -267,7 +266,6 @@ def process_ingest_batch(
         ):
             spark.catalog.refreshByPath(p)
     finally:
-        handle.unpersist()
         release_session_caches()
 
 

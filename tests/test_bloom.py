@@ -77,9 +77,7 @@ def test_empty_build_and_guards(spark):
 
 def test_incremental_probe_flags_identical_with_bloom(spark):
     from solana_snapshot_etl_tools_spark.operators import incremental as INC
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        release_session_caches,
-    )
+    from solana_snapshot_etl_tools_spark.session import release_session_caches
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -254,9 +252,7 @@ def test_incremental_probe_with_sharded_store(spark, tmp_path_factory):
     to the unaccelerated probe, with the sharded store's executor-side
     loads."""
     from solana_snapshot_etl_tools_spark.operators import incremental as INC
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        release_session_caches,
-    )
+    from solana_snapshot_etl_tools_spark.session import release_session_caches
 
     base = tmp_path_factory.mktemp("inc_sharded")
     docs = spark.read.parquet(

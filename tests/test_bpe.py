@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from solana_snapshot_etl_tools_spark.operators import bpe as B
+from solana_snapshot_etl_tools_spark.session import clear_memo
 
 
 # --- naive reference ---------------------------------------------------------
@@ -136,7 +137,7 @@ def test_bpe_compresses_real_corpus(spark):
 
 def test_bpe_train_is_memoized_and_deterministic(spark):
     src = "/root/testdata/sf0.001/documents.parquet"
-    B.clear_bpe_memo()
+    clear_memo()
     m1 = B.bpe_train(spark.read.parquet(src), n_merges=30)
     # fresh same-plan frame: parquet reads have a stable semanticHash
     m2 = B.bpe_train(spark.read.parquet(src), n_merges=30)

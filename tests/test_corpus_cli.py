@@ -27,7 +27,7 @@ def test_stage_runner_order_counts_and_caching(spark, monkeypatch):
     dropped key); a disabled stage leaves frame and report untouched."""
     from types import SimpleNamespace
 
-    from solana_snapshot_etl_tools_spark.operators import dedup as DD
+    from solana_snapshot_etl_tools_spark.session import release_session_caches
 
     seen = []
 
@@ -56,10 +56,9 @@ def test_stage_runner_order_counts_and_caching(spark, monkeypatch):
         assert report == {"n_after_c": 5, "n_c_dropped": 5, "n_after_a": 3}
         assert sorted(r.doc_id for r in out.collect()) == [0, 1, 2]
     finally:
-        DD.release_session_caches()
+        release_session_caches()
 
 
-@pytest.mark.slow
 def test_document_pipeline_end_to_end(spark, tmp_path_factory, capsys):
     out = str(tmp_path_factory.mktemp("corpus_docs"))
     rep = _run(capsys, SRC, out, "--near-dedup", "--records-per-shard", "100")

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from solana_snapshot_etl_tools_spark import session as SESSION
 from solana_snapshot_etl_tools_spark.operators import dedup as DD
 from solana_snapshot_etl_tools_spark.operators import similarity as SIM
 from solana_snapshot_etl_tools_spark.plans.relational import _t
@@ -643,7 +644,7 @@ def test_release_session_caches_frees_operator_caches(spark):
     them all (no session-lifetime storage pinning) while already-
     collected results stay valid and a re-run still works."""
     docs = _t(spark, SF_DIR, "documents").limit(200)
-    DD.release_session_caches()  # drop leftovers from other tests
+    SESSION.release_session_caches()  # drop leftovers from other tests
     jsc = spark.sparkContext._jsc.sc()
     baseline = jsc.getPersistentRDDs().size()
     pairs = DD.minhash_lsh_pairs(docs, "doc_id", "text").collect()
@@ -652,9 +653,9 @@ def test_release_session_caches_frees_operator_caches(spark):
     ).collect()
     assert len(comp) == 200
     assert jsc.getPersistentRDDs().size() > baseline  # ops did cache
-    freed = DD.release_session_caches()
+    freed = SESSION.release_session_caches()
     assert freed >= 3  # sig + pairs (×2 runs) + labels
-    assert not DD._SESSION_CACHES
+    assert not SESSION._CACHES
     # storage really drained back to where it started (the release is
     # blocking; CacheManager dedupes identical plans so freed-count and
     # entry-count need not match 1:1)
@@ -664,7 +665,7 @@ def test_release_session_caches_frees_operator_caches(spark):
     assert {(r.doc_a, r.doc_b) for r in again} == {
         (r.doc_a, r.doc_b) for r in pairs
     }
-    DD.release_session_caches()
+    SESSION.release_session_caches()
 
 
 def test_jaccard_default_guard_inert_on_test_corpus(spark):
@@ -701,30 +702,86 @@ def test_jaccard_default_guard_inert_on_test_corpus(spark):
         ).collect()
     }
     assert guarded == unguarded
-    DD.release_session_caches()
+    SESSION.release_session_caches()
 
 
 def test_ann_training_memo_reuses_fits(spark):
     """Two invocations over the same corpus plan must reuse the same
     trained centroids (identity, not just equality) and the memo must
     be clearable; IVF-PQ's coarse fit shares plain IVF's entry."""
-    SIM.clear_training_memo()
+    SESSION.clear_memo()
     emb = _t(spark, SF_DIR, "embeddings")
     _, c1 = SIM.ivf_assign(emb, n_lists=8)
-    n_after_first = len(SIM._TRAINING_MEMO)
+    n_after_first = len(SESSION._MEMO)
     assert n_after_first >= 2  # sample + coarse
     emb2 = _t(spark, SF_DIR, "embeddings")  # fresh object, same plan
     _, c2 = SIM.ivf_assign(emb2, n_lists=8)
-    assert len(SIM._TRAINING_MEMO) == n_after_first  # no new entries
+    assert len(SESSION._MEMO) == n_after_first  # no new entries
     import numpy as np
 
     assert all(np.array_equal(a, b) for a, b in zip(c1, c2))
     # different params → new fit entry, same sample entry
     SIM.ivf_assign(emb, n_lists=4)
-    assert sum(1 for k in SIM._TRAINING_MEMO if k[0] == "coarse") == 2
-    assert sum(1 for k in SIM._TRAINING_MEMO if k[0] == "sample") == 1
-    SIM.clear_training_memo()
-    assert not SIM._TRAINING_MEMO
+    assert sum(1 for k in SESSION._MEMO if k[0] == "coarse") == 2
+    assert sum(1 for k in SESSION._MEMO if k[0] == "sample") == 1
+    SESSION.clear_memo()
+    assert not SESSION._MEMO
+
+
+def test_session_memo_caps_none_keys_clear_and_save(
+    spark, tmp_path, monkeypatch
+):
+    """The one session memo: a capped kind evicts its oldest entry and
+    leaves other kinds alone; a None key part refits every call and
+    stores nothing; save_training_memo pickles only the ANN fit kinds
+    while a BPE and a metadata-expression entry sit beside them; two
+    metadata_decode calls in one session build the Column tree once;
+    clear_memo() empties every kind."""
+    import pickle
+
+    from solana_snapshot_etl_tools_spark.operators import decoders as D
+
+    SESSION.clear_memo()
+    corpus = ("plan", "vec_id", "vec")
+    for kind in SIM._FIT_KINDS:
+        SESSION.memo(kind, (corpus, 8), lambda kind=kind: f"{kind} fit")
+    for i in range(6):  # BPE cap 4: the two oldest go
+        SESSION.memo("merges", ("plan", "text", i), lambda i=i: {"merges": i})
+    for i in range(5):  # sample cap 4: the oldest goes
+        SESSION.memo("sample", (corpus, i), lambda i=i: i)
+    assert [k[3] for k in SESSION._MEMO if k[0] == "merges"] == [2, 3, 4, 5]
+    assert [k[2] for k in SESSION._MEMO if k[0] == "sample"] == [1, 2, 3, 4]
+    for kind in SIM._FIT_KINDS:
+        assert SESSION._MEMO[(kind, corpus, 8)] == f"{kind} fit"
+    hit = SESSION.memo("merges", ("plan", "text", 5), lambda: None)
+    assert hit == {"merges": 5}
+
+    n_before, calls = len(SESSION._MEMO), []
+    for _ in range(2):
+        fit = SESSION.memo("coarse", (None, 8), lambda: calls.append(1) or "refit")
+        assert fit == "refit"
+    assert len(calls) == 2 and len(SESSION._MEMO) == n_before
+
+    built = []
+    build = D._metadata_decode_exprs
+    monkeypatch.setattr(
+        D, "_metadata_decode_exprs", lambda col: built.append(col) or build(col)
+    )
+    df = spark.createDataFrame([(bytes(8),)], "data binary")
+    first, second = D.metadata_decode(df), D.metadata_decode(df)
+    assert built == ["data"]
+    assert first.collect() == second.collect()
+    assert sum(1 for k in SESSION._MEMO if k[0] == "metadata_exprs") == 1
+
+    path = tmp_path / "fits.pkl"
+    assert SIM.save_training_memo(str(path)) == 3
+    with open(path, "rb") as f:
+        saved = pickle.load(f)
+    assert sorted(k[0] for k in saved) == sorted(SIM._FIT_KINDS)
+    SESSION.clear_memo()
+    assert not SESSION._MEMO
+    assert SIM.load_training_memo(str(path)) == 3
+    SESSION.clear_memo()
 
 
 # --- round-5 operators: PII, repetition, vocab stats, rarity, semantic dedup
@@ -1325,13 +1382,13 @@ def test_ann_training_memo_save_load(spark, tmp_path, monkeypatch):
     from solana_snapshot_etl_tools_spark.operators import similarity as S2
 
     emb = _t(spark, SF_DIR, "embeddings")
-    S2.clear_training_memo()
+    SESSION.clear_memo()
     assigned, centers = S2.ivf_assign(emb, n_lists=8)
     assert assigned.count() > 0
     path = str(tmp_path / "ann_fits.pkl")
     n = S2.save_training_memo(path)
     assert n >= 1
-    S2.clear_training_memo()
+    SESSION.clear_memo()
     assert S2.load_training_memo(path) == n
 
     def _no_train(*a, **k):
@@ -1343,4 +1400,4 @@ def test_ann_training_memo_save_load(spark, tmp_path, monkeypatch):
     import numpy as _np
 
     assert _np.array_equal(_np.asarray(centers2), _np.asarray(centers))
-    S2.clear_training_memo()
+    SESSION.clear_memo()

@@ -10,6 +10,7 @@ import math
 import pytest
 
 from solana_snapshot_etl_tools_spark.operators import unigram as U
+from solana_snapshot_etl_tools_spark.session import clear_memo
 
 
 def _all_segmentations(word, pieces, max_len):
@@ -84,7 +85,7 @@ def test_train_contract_and_determinism(spark):
         1.0, abs=1e-6
     )
     # deterministic across reruns (memo cleared) and partitionings
-    U.clear_unigram_memo()
+    clear_memo()
     m2 = U.unigram_train(
         docs.repartition(7), vocab_size=200, train_limit=600, em_iters=2
     )
@@ -111,9 +112,9 @@ def test_em_increases_sample_likelihood(spark):
             for w, c in wf.items()
         )
 
-    U.clear_unigram_memo()
+    clear_memo()
     m1 = U.unigram_train(docs, vocab_size=300, train_limit=100, em_iters=1)
-    U.clear_unigram_memo()
+    clear_memo()
     m3 = U.unigram_train(docs, vocab_size=300, train_limit=100, em_iters=4)
     assert loglik(m3) >= loglik(m1) - 1e-6
 
@@ -239,7 +240,7 @@ def test_sampled_encode_is_deterministic_per_doc_and_valid(spark):
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text").orderBy("doc_id").limit(40)
-    U.clear_unigram_memo()
+    clear_memo()
     m = U.unigram_train(docs, vocab_size=300, train_limit=40)
     a = {
         r.doc_id: list(r.token_ids)
@@ -303,7 +304,7 @@ def test_unigram_decode_and_tokenizer_artifact(spark, tmp_path):
         .select("doc_id", "text")
         .limit(60)
     )
-    U.clear_unigram_memo()
+    clear_memo()
     m = U.unigram_train(docs, vocab_size=300, train_limit=60)
     norm = {
         r.doc_id: " ".join(r.text.lower().split()) for r in docs.collect()

@@ -22,12 +22,11 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
 from solana_snapshot_etl_tools_spark.operators import decontam as DC
-from solana_snapshot_etl_tools_spark.operators.dedup import release_session_caches
 from solana_snapshot_etl_tools_spark.plans.llm_ops2 import (
     DECONTAM_BENCH_MOD,
     DECONTAM_K,
 )
-from solana_snapshot_etl_tools_spark.session import get_spark
+from solana_snapshot_etl_tools_spark.session import get_spark, release_session_caches
 
 
 def main() -> None:

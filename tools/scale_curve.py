@@ -152,9 +152,7 @@ def build_nx(spark, out_dir: str, scale: int) -> None:
 
 
 def _time_median(fn, runs: int) -> float:
-    from solana_snapshot_etl_tools_spark.operators.dedup import (
-        release_session_caches,
-    )
+    from solana_snapshot_etl_tools_spark.session import release_session_caches
 
     walls = []
     for _ in range(runs):

@@ -16,10 +16,7 @@ import time
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entry_mod
-from solana_snapshot_etl_tools_spark.operators.dedup import (
-    release_session_caches,
-)
-from solana_snapshot_etl_tools_spark.session import get_spark
+from solana_snapshot_etl_tools_spark.session import get_spark, release_session_caches
 
 
 def main() -> None:
