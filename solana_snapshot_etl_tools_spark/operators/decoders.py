@@ -84,12 +84,20 @@ def csv_projection(raw: DataFrame) -> DataFrame:
 # --- T1/T2/T3: SPL token fixed layouts (reference sqlite.rs:236-324) --------
 
 
-def _token_rows(raw: DataFrame, size: int) -> DataFrame:
-    """F1 owner routing + F11 exact-size dispatch; wrong sizes are
-    skipped (L1 leniency, sqlite.rs:252-258)."""
+def token_latest(raw: DataFrame) -> DataFrame:
+    """F1 owner routing + X3: the last-write-wins version of every
+    SPL-token-owned account, the one frame T1/T2/T3 decode from.
+
+    The owner filter runs BEFORE the dedup, not after it: the
+    reference upserts a token row only while the account is
+    token-owned (sqlite.rs:206-216), so a later non-token version of
+    the same pubkey must not drop the row, as it would if the token
+    tables were derived from the all-accounts dedup. Each decoder then
+    keeps its exact layout size (F11); wrong sizes are skipped (L1
+    leniency, sqlite.rs:252-258)."""
     return dedup_last_write_wins(
         raw.filter(F.col("owner") == F.lit(S.TOKEN_PROGRAM_ID))
-    ).filter(F.col("data_len") == size)
+    )
 
 
 def _coption_tag_ok(d: Column, off0: int) -> Column:
@@ -101,6 +109,10 @@ def _coption_tag_ok(d: Column, off0: int) -> Column:
 
 
 def token_account_table(raw: DataFrame) -> DataFrame:
+    return decode_token_account(token_latest(raw))
+
+
+def decode_token_account(latest: DataFrame) -> DataFrame:
     """T1 with full unpack validation: the reference's
     ``spl_token::state::Account::unpack`` rejects rows whose state byte
     is not a valid AccountState (0|1|2), whose state is Uninitialized
@@ -108,7 +120,7 @@ def token_account_table(raw: DataFrame) -> DataFrame:
     entire row, not individual fields."""
     d = F.col("data")
     return (
-        _token_rows(raw, S.SPL_ACCOUNT_LEN)
+        latest.filter(F.col("data_len") == S.SPL_ACCOUNT_LEN)
         .filter(
             u8_at(d, 108).isin(1, 2)  # valid AND initialized state
             & _coption_tag_ok(d, 72)  # delegate
@@ -130,12 +142,16 @@ def token_account_table(raw: DataFrame) -> DataFrame:
 
 
 def token_mint_table(raw: DataFrame) -> DataFrame:
+    return decode_token_mint(token_latest(raw))
+
+
+def decode_token_mint(latest: DataFrame) -> DataFrame:
     """T2 with unpack validation: ``Mint::unpack`` requires the
     is_initialized byte to be exactly 1 (0 = uninitialized is skipped,
     >1 fails the bool parse) and valid COption tags."""
     d = F.col("data")
     return (
-        _token_rows(raw, S.SPL_MINT_LEN)
+        latest.filter(F.col("data_len") == S.SPL_MINT_LEN)
         .filter(
             (u8_at(d, 45) == 1)
             & _coption_tag_ok(d, 0)  # mint_authority
@@ -153,6 +169,10 @@ def token_mint_table(raw: DataFrame) -> DataFrame:
 
 
 def token_multisig_table(raw: DataFrame) -> DataFrame:
+    return decode_token_multisig(token_latest(raw))
+
+
+def decode_token_multisig(latest: DataFrame) -> DataFrame:
     """T3 decode + X2 explode: one row per (pubkey, signer), only the
     first n of the 11 signer slots are valid (sqlite.rs:315-322).
     ``Multisig::unpack`` requires is_initialized (byte 2) == 1."""
@@ -162,7 +182,7 @@ def token_multisig_table(raw: DataFrame) -> DataFrame:
     )
     n = u8_at(d, 1).cast("int")
     return (
-        _token_rows(raw, S.SPL_MULTISIG_LEN)
+        latest.filter(F.col("data_len") == S.SPL_MULTISIG_LEN)
         .filter(u8_at(d, 2) == 1)
         .select(
             "pubkey",

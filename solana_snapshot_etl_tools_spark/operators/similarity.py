@@ -22,6 +22,8 @@ see _numpy_cosine_rerank.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
@@ -77,6 +79,23 @@ def _corpus_sample(emb: DataFrame, id_col: str, vec_col: str, train_limit: int):
         return np.stack(pdf["cv"].to_numpy()) if len(pdf) else np.empty((0, 0))
 
     return memo("sample", (_corpus_key(emb, id_col, vec_col), train_limit), collect)
+
+
+def _fit_sample(
+    op: str, emb: DataFrame, id_col: str, vec_col: str, train_limit: int,
+    min_rows: int, min_name: str, m: int | None = None,
+):
+    """:func:`_corpus_sample` with the size and dims checks of a fit.
+    Called only inside a fit's memo lambda, so a fit served from the
+    memo (a loaded training memo included) runs no sample job."""
+    X = _corpus_sample(emb, id_col, vec_col, train_limit)
+    if len(X) < min_rows:
+        raise ValueError(
+            f"{op}: corpus sample has {len(X)} vectors < {min_name}={min_rows}"
+        )
+    if m is not None and X.shape[1] % m:
+        raise ValueError(f"{op}: dims {X.shape[1]} not divisible by m={m}")
+    return X
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -455,16 +474,14 @@ def ivf_assign(
         "neighbor_id", _l2_normalize(F.col("_raw")).alias("cv")
     )
     ck = _corpus_key(emb, id_col, vec_col)
-    X = _corpus_sample(emb, id_col, vec_col, train_limit)
-    if len(X) < n_lists:
-        raise ValueError(
-            f"ivf_assign: corpus sample has {len(X)} vectors < "
-            f"n_lists={n_lists}"
-        )
     C = memo(
         "coarse",
         (ck, n_lists, seed, max_iter, train_limit),
-        lambda: _train_coarse_quantizer(X, n_lists, seed, max_iter),
+        lambda: _train_coarse_quantizer(
+            _fit_sample("ivf_assign", emb, id_col, vec_col, train_limit,
+                        n_lists, "n_lists"),
+            n_lists, seed, max_iter,
+        ),
     )
     center_rows = [[float(x) for x in c] for c in C]
 
@@ -562,18 +579,14 @@ def pq_encode(
         "neighbor_id", _l2_normalize(F.col("_raw")).alias("cv")
     )
     ck = _corpus_key(emb, id_col, vec_col)
-    X = _corpus_sample(emb, id_col, vec_col, train_limit)
-    if len(X) < ksub:
-        raise ValueError(
-            f"pq_encode: corpus sample has {len(X)} vectors < ksub={ksub}"
-        )
-    dims = X.shape[1]
-    if dims % m:
-        raise ValueError(f"pq_encode: dims {dims} not divisible by m={m}")
     books = memo(
         "books",
         (ck, m, nbits, seed, max_iter, train_limit),
-        lambda: _train_pq_codebooks(X, m, ksub, seed, max_iter),
+        lambda: _train_pq_codebooks(
+            _fit_sample("pq_encode", emb, id_col, vec_col, train_limit,
+                        ksub, "ksub", m),
+            m, ksub, seed, max_iter,
+        ),
     )
     book_rows = books.tolist()  # plain lists ship by value in the closure
 
@@ -825,21 +838,20 @@ def ivf_pq_ann_topk(
         "neighbor_id", _l2_normalize(F.col("_raw")).alias("cv")
     )
     ck = _corpus_key(emb, id_col, vec_col)
-    X = _corpus_sample(emb, id_col, vec_col, train_limit)
-    if len(X) < max(n_lists, ksub):
-        raise ValueError(
-            f"ivf_pq_ann_topk: corpus sample has {len(X)} vectors < "
-            f"max(n_lists, ksub)={max(n_lists, ksub)}"
+
+    @functools.cache  # one collect even when the memo cannot key the corpus
+    def X():
+        return _fit_sample(
+            "ivf_pq_ann_topk", emb, id_col, vec_col, train_limit,
+            max(n_lists, ksub), "max(n_lists, ksub)", m,
         )
-    dims = X.shape[1]
-    if dims % m:
-        raise ValueError(f"ivf_pq_ann_topk: dims {dims} not divisible by m={m}")
+
     # the coarse fit shares its memo entry with plain IVF (same params
     # → same centroids); the sub-quantizers are decorrelated via seed+1
     C = memo(
         "coarse",
         (ck, n_lists, seed, max_iter, train_limit),
-        lambda: _train_coarse_quantizer(X, n_lists, seed, max_iter),
+        lambda: _train_coarse_quantizer(X(), n_lists, seed, max_iter),
     )
     if n_probe is None:
         # candidate recall is fixed by the coarse quantizer alone
@@ -856,12 +868,12 @@ def ivf_pq_ann_topk(
         n_probe = memo(
             "ivf_nprobe",
             (ck, n_lists, seed, max_iter, train_limit, target_recall, k),
-            lambda: _tune_n_probe(X, C, target_recall, k, seed),
+            lambda: _tune_n_probe(X(), C, target_recall, k, seed),
         )
     books = memo(
         "books",
         (ck, m, nbits, seed + 1, max_iter, train_limit),
-        lambda: _train_pq_codebooks(X, m, ksub, seed + 1, max_iter),
+        lambda: _train_pq_codebooks(X(), m, ksub, seed + 1, max_iter),
     )
     C_rows, book_rows = C.tolist(), books.tolist()
 
@@ -1010,13 +1022,15 @@ def ivf_ann_topk(
     )
     if n_probe is None:
         ck = _corpus_key(emb, id_col, vec_col)
-        X = _corpus_sample(emb, id_col, vec_col, train_limit)
         # max_iter in the key: the tuned width is a property of the
         # centroids max_iter produced (same rationale as ivf_pq's memo)
         n_probe = memo(
             "ivf_nprobe",
             (ck, n_lists, seed, max_iter, train_limit, target_recall, k),
-            lambda: _tune_n_probe(X, centers, target_recall, k, seed),
+            lambda: _tune_n_probe(
+                _corpus_sample(emb, id_col, vec_col, train_limit),
+                centers, target_recall, k, seed,
+            ),
         )
     centers_lit = F.array(
         *[

@@ -20,10 +20,25 @@ so the join is Exchange-free at any scale: each bucket pair is
 co-located by construction, and the 100 TB replay pays zero shuffle
 on what is otherwise the biggest two-table join in the schema
 (``tests/test_build_tables.py`` asserts the shuffle-free plan).
+
+One scan per build: like the reference, which walks each AppendVec
+once and hands every account to every sink, ``build_all_tables``,
+``build_sqlite`` and ``build_bucketed_token_tables`` decode the
+archive once. The scan is a lazy ``localCheckpoint`` — filled by the
+first job that reads it, so it adds no job — and the three SPL token
+tables share one lazily checkpointed last-write-wins dedup
+(``decoders.token_latest``). The trade: the scan is spilled once to
+executor storage (``MEMORY_AND_DISK``) instead of being decoded five
+times, and its blocks are lost with their executor, so losing an
+executor mid-build fails the build instead of recomputing the scan.
+``streaming.ingest`` and ``dedup.connected_components`` take the same
+stance. Both checkpoints are released once the build's last write
+ends, whether it succeeded or not.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import uuid
@@ -31,6 +46,10 @@ import uuid
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from solana_snapshot_etl_tools_spark.operators import decoders as D
+from solana_snapshot_etl_tools_spark.session import (
+    checkpoint_for_session,
+    release_frame,
+)
 
 TABLES = (
     "account",
@@ -41,15 +60,36 @@ TABLES = (
 )
 
 
-def build_tables(raw: DataFrame) -> dict[str, DataFrame]:
-    """The five derived DataFrames (no materialization)."""
+def _tables(raw: DataFrame, latest: DataFrame) -> dict[str, DataFrame]:
+    """The five tables from ``raw`` and its ``D.token_latest(raw)``."""
     return {
         "account": D.account_table(raw),
-        "token_account": D.token_account_table(raw),
-        "token_mint": D.token_mint_table(raw),
-        "token_multisig": D.token_multisig_table(raw),
+        "token_account": D.decode_token_account(latest),
+        "token_mint": D.decode_token_mint(latest),
+        "token_multisig": D.decode_token_multisig(latest),
         "token_metadata": D.token_metadata_table(raw),
     }
+
+
+def build_tables(raw: DataFrame) -> dict[str, DataFrame]:
+    """The five derived DataFrames (no materialization)."""
+    return _tables(raw, D.token_latest(raw))
+
+
+@contextlib.contextmanager
+def _shared_tables(raw: DataFrame):
+    """:func:`build_tables` over one lazily checkpointed scan of
+    ``raw`` and one checkpointed token dedup, both released when the
+    build ends."""
+    scan = checkpoint_for_session(raw, eager=False)
+    frames = [scan]
+    try:
+        latest = checkpoint_for_session(D.token_latest(scan), eager=False)
+        frames.append(latest)
+        yield _tables(scan, latest)
+    finally:
+        for df in frames:
+            release_frame(df)
 
 
 def _atomic_write_parquet(df: DataFrame, dest: str) -> None:
@@ -66,11 +106,12 @@ def build_all_tables(raw: DataFrame, out_dir: str) -> dict[str, int]:
     row counts per table (A4 counters)."""
     os.makedirs(out_dir, exist_ok=True)
     counts: dict[str, int] = {}
-    for name, df in build_tables(raw).items():
-        obs = Observation(f"rows_{name}")
-        observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        _atomic_write_parquet(observed, os.path.join(out_dir, name))
-        counts[name] = obs.get["n"]
+    with _shared_tables(raw) as tables:
+        for name, df in tables.items():
+            obs = Observation(f"rows_{name}")
+            observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+            _atomic_write_parquet(observed, os.path.join(out_dir, name))
+            counts[name] = obs.get["n"]
     return counts
 
 
@@ -171,23 +212,24 @@ def build_sqlite(raw: DataFrame, db_path: str, batch_rows: int = 5000) -> dict[s
         for ddl in _SQLITE_DDL.values():
             con.execute(ddl)
         counts: dict[str, int] = {}
-        for name, df in build_tables(raw).items():
-            cols = df.columns
-            sql = (
-                f"INSERT OR REPLACE INTO {name} ({', '.join(cols)}) "
-                f"VALUES ({', '.join('?' * len(cols))})"
-            )
-            n, batch = 0, []
-            for row in df.toLocalIterator():
-                batch.append(tuple(_sqlite_cell(v) for v in row))
-                if len(batch) >= batch_rows:
+        with _shared_tables(raw) as tables:
+            for name, df in tables.items():
+                cols = df.columns
+                sql = (
+                    f"INSERT OR REPLACE INTO {name} ({', '.join(cols)}) "
+                    f"VALUES ({', '.join('?' * len(cols))})"
+                )
+                n, batch = 0, []
+                for row in df.toLocalIterator():
+                    batch.append(tuple(_sqlite_cell(v) for v in row))
+                    if len(batch) >= batch_rows:
+                        con.executemany(sql, batch)
+                        n += len(batch)
+                        batch = []
+                if batch:
                     con.executemany(sql, batch)
                     n += len(batch)
-                    batch = []
-            if batch:
-                con.executemany(sql, batch)
-                n += len(batch)
-            counts[name] = n
+                counts[name] = n
         con.commit()
     except BaseException:
         con.close()
@@ -233,22 +275,16 @@ def build_bucketed_token_tables(
     the join key of the canonical NFT query — as catalog tables
     ``token_account_bkt`` / ``token_metadata_bkt``."""
     os.makedirs(out_dir, exist_ok=True)
-    write_bucketed(
-        D.token_account_table(raw),
-        "token_account_bkt",
-        os.path.join(out_dir, "token_account_bkt"),
-        ["mint"],
-        n_buckets,
-        sort_cols=["mint"],
-    )
-    write_bucketed(
-        D.token_metadata_table(raw),
-        "token_metadata_bkt",
-        os.path.join(out_dir, "token_metadata_bkt"),
-        ["mint"],
-        n_buckets,
-        sort_cols=["mint"],
-    )
+    with _shared_tables(raw) as tables:
+        for name in ("token_account", "token_metadata"):
+            write_bucketed(
+                tables[name],
+                f"{name}_bkt",
+                os.path.join(out_dir, f"{name}_bkt"),
+                ["mint"],
+                n_buckets,
+                sort_cols=["mint"],
+            )
 
 
 def nft_holdings(spark) -> DataFrame:

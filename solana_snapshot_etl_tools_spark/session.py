@@ -156,15 +156,17 @@ def cache_for_session(df: DataFrame) -> DataFrame:
 
 
 class _CheckpointHandle:
-    """Unpersist handle for a ``localCheckpoint(eager=True)`` frame.
+    """Unpersist handle for a ``localCheckpoint`` frame.
 
     A checkpointed DataFrame is backed by a persisted RDD that
     ``df.unpersist()`` does NOT reach (no CacheManager entry), so it
     would otherwise pin storage until the ContextCleaner happens to GC
     it. The handle grabs the LogicalRDD's RDD via the query execution
     (a private accessor — degraded to a no-op if the accessor moves in
-    a future Spark, leaving cleanup to the ContextCleaner). Quacks
-    like a DataFrame for ``release_session_caches``."""
+    a future Spark, leaving cleanup to the ContextCleaner). The RDD
+    exists from the ``localCheckpoint`` call on, so the handle works
+    the same for a lazy checkpoint whose blocks are not yet written.
+    Quacks like a DataFrame for ``release_session_caches``."""
 
     def __init__(self, df: DataFrame):
         self.df = df
@@ -179,11 +181,17 @@ class _CheckpointHandle:
             self._rdd = None
 
 
-def checkpoint_for_session(df: DataFrame) -> DataFrame:
-    """``df.localCheckpoint(eager=True)``, registered. Unlike a plain
+def checkpoint_for_session(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, registered. Unlike a plain
     cache, releasing a checkpoint leaves nothing to recompute from: a
-    result built on it must be materialized before the release."""
-    df = df.localCheckpoint(eager=True)
+    result built on it must be materialized before the release.
+
+    ``eager=True`` runs a job now that fills the checkpoint.
+    ``eager=False`` runs none: the first job that reads the frame
+    writes its blocks (``MEMORY_AND_DISK``) as a side effect, and
+    every later job reads them back. Use it when the frame's first
+    consumer is itself a job you were going to run anyway."""
+    df = df.localCheckpoint(eager=eager)
     _CACHES.append(_CheckpointHandle(df))
     return df
 

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from solana_snapshot_etl_tools_spark.fixtures import build_fixture
 from solana_snapshot_etl_tools_spark.plans import build_tables as BT
 
@@ -22,6 +24,53 @@ def test_build_all_tables_atomic(spark, raw_accounts, tmp_path):
         assert spark.read.parquet(path).count() == counts[t]
         # no leftover temp dirs (atomic promotion)
     assert not [d for d in os.listdir(out) if "._tmp." in d]
+
+
+def _build_bucketed_counts(raw, out):
+    spark = raw.sparkSession
+    try:
+        BT.build_bucketed_token_tables(raw, out, n_buckets=8)
+        return {
+            t: spark.table(f"{t}_bkt").count()
+            for t in ("token_account", "token_metadata")
+        }
+    finally:
+        spark.sql("DROP TABLE IF EXISTS token_account_bkt")
+        spark.sql("DROP TABLE IF EXISTS token_metadata_bkt")
+
+
+@pytest.mark.parametrize(
+    "build, dest",
+    [
+        (BT.build_all_tables, "tables"),
+        (BT.build_sqlite, "snapshot.db"),
+        (_build_bucketed_counts, "bkt"),
+    ],
+    ids=["build_all_tables", "build_sqlite", "build_bucketed_token_tables"],
+)
+def test_build_scans_raw_once(spark, raw_accounts, tmp_path, build, dest):
+    """One build decodes the archive once, as the reference walks each
+    AppendVec once: an identity mapInPandas over the raw frame counts
+    the rows every job pulls through it; a build that re-scanned per
+    table would count 5× the rows. The build's checkpoints are released
+    when it returns."""
+    sc = spark.sparkContext
+    scanned = sc.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            scanned.add(len(pdf))
+            yield pdf
+
+    raw = raw_accounts.mapInPandas(count_rows, raw_accounts.schema)
+    n_raw = raw_accounts.count()
+    persisted = sc._jsc.getPersistentRDDs().size()
+    counts = build(raw, str(tmp_path / dest))
+    assert scanned.value == n_raw
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+    expected = build_fixture()["expected"]
+    assert counts == {t: len(expected[t][2]) for t in counts}
+    assert set(counts) >= {"token_account", "token_metadata"}
 
 
 def test_build_overwrite_is_atomic(spark, raw_accounts, tmp_path):

@@ -165,3 +165,24 @@ def test_dedup_keeps_max_slot_writeversion(raw_accounts):
     assert win.count() == win.select("pubkey").distinct().count()
     # total raw rows > winners (fixture emits 30 duplicates)
     assert raw_accounts.count() > win.count()
+
+
+def test_token_rows_survive_a_later_non_token_version(raw_accounts):
+    """The token tables dedup the token-owned versions only: a later
+    version of a token account under another owner replaces its
+    ``account`` row but keeps its ``token_account`` row, as the
+    reference's per-version upsert does."""
+    from solana_snapshot_etl_tools_spark import schemas as S
+
+    tok = D.token_account_table(raw_accounts).select("pubkey").limit(1).collect()
+    key = tok[0].pubkey
+    later = (
+        raw_accounts.filter(F.col("pubkey") == F.lit(key))
+        .withColumn("slot", F.col("slot") + 1_000_000)
+        .withColumn("owner", F.lit(S.SYSTEM_PROGRAM_ID))
+    )
+    raw = raw_accounts.unionByName(later)
+    mine = F.col("pubkey") == F.lit(key)
+    assert D.token_account_table(raw).filter(mine).count() == 1
+    (acct,) = D.account_table(raw).filter(mine).collect()
+    assert bytes(acct.owner) == bytes(S.SYSTEM_PROGRAM_ID)

@@ -1377,8 +1377,9 @@ def test_soft_dedup_weights_guards(spark):
 def test_ann_training_memo_save_load(spark, tmp_path, monkeypatch):
     """Cross-session codebook reuse: save the fits, clear the memo
     (the new-session simulation), load — ivf_assign then runs WITHOUT
-    retraining (the trainer is patched to raise), proving the loaded
-    artifact serves the fit."""
+    retraining and without collecting a training sample (the trainer
+    and the sampler are patched to raise), proving the loaded artifact
+    serves the fit."""
     from solana_snapshot_etl_tools_spark.operators import similarity as S2
 
     emb = _t(spark, SF_DIR, "embeddings")
@@ -1394,7 +1395,11 @@ def test_ann_training_memo_save_load(spark, tmp_path, monkeypatch):
     def _no_train(*a, **k):
         raise AssertionError("refit attempted despite loaded memo")
 
+    def _no_sample(*a, **k):
+        raise AssertionError("training sample collected despite loaded memo")
+
     monkeypatch.setattr(S2, "_train_coarse_quantizer", _no_train)
+    monkeypatch.setattr(S2, "_corpus_sample", _no_sample)
     assigned2, centers2 = S2.ivf_assign(emb, n_lists=8)
     assert assigned2.count() == assigned.count()
     import numpy as _np

@@ -21,7 +21,10 @@ Runs, in order:
    --full-bench, additionally runs a LIVE bench at
    $SPARK_GRAFT_SF_DIR (default sf0.1) and gates that instead;
 7. the slow capstone set (``pytest tests/ -m slow -q``) — the e2e
-   CLI and stream compositions the default gate deselects.
+   CLI and stream compositions the default gate deselects;
+8. the benchmark's self-tests (``pytest perfbench -q``, about a
+   minute) — they call ``plans.build_tables`` by name, so a rename or
+   signature change there fails here, not first in a benchmark run.
 
 Usage: python tools/preflight.py [--skip-bench] [--skip-plan-audit]
                                  [--full-bench]
@@ -40,10 +43,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _pytest(name: str, *args: str) -> bool:
+    """Run ``pytest -q ARGS`` from the repo root; print its summary
+    line and return whether it passed."""
+    r = subprocess.run(
+        [sys.executable, "-m", "pytest", *args,
+         "-q", "--no-header", "-p", "no:cacheprovider"],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+    )
+    tail = [ln for ln in r.stdout.splitlines() if ln.strip()][-1:]
+    print(tail[0] if tail else f"{name} produced no output")
+    return r.returncode == 0
+
+
 def main() -> int:
     failures: list[str] = []
 
-    print("== 1/7 rotation gate ==", flush=True)
+    print("== 1/8 rotation gate ==", flush=True)
     r = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "check_rotation.py")],
         capture_output=True,
@@ -53,7 +71,7 @@ def main() -> int:
     if r.returncode != 0:
         failures.append("rotation gate")
 
-    print("== 2/7 entry smoke (HOSTILE env) ==", flush=True)
+    print("== 2/8 entry smoke (HOSTILE env) ==", flush=True)
     # the real hostile recipe (verify skill): cwd OUTSIDE the repo so
     # Spark workers don't inherit the driver's sys.path (catches
     # by-reference-pickled UDFs), non-UTC host TZ, and the grading
@@ -82,7 +100,7 @@ def main() -> int:
     if r.returncode != 0 or len(rows) != 2:
         failures.append("hostile entry smoke")
 
-    print("== 3/7 prefix correctness sim (sf0.01) ==", flush=True)
+    print("== 3/8 prefix correctness sim (sf0.01) ==", flush=True)
     r = subprocess.run(
         [
             sys.executable,
@@ -100,7 +118,7 @@ def main() -> int:
         failures.append("prefix correctness sim")
 
     if "--skip-bench" not in sys.argv:
-        print("== 4/7 bench contract (sf0.001) ==", flush=True)
+        print("== 4/8 bench contract (sf0.001) ==", flush=True)
         env = dict(
             os.environ,
             SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -128,23 +146,11 @@ def main() -> int:
             failures.append("bench contract")
 
     if "--skip-plan-audit" not in sys.argv:
-        print("== 5/7 plan-shape watchdog ==", flush=True)
-        r = subprocess.run(
-            [
-                sys.executable, "-m", "pytest",
-                os.path.join(REPO, "tests", "test_plan_audit.py"),
-                "-q", "--no-header", "-p", "no:cacheprovider",
-            ],
-            capture_output=True,
-            text=True,
-            cwd=REPO,
-        )
-        tail = [ln for ln in r.stdout.splitlines() if ln.strip()][-1:]
-        print(tail[0] if tail else "plan audit produced no output")
-        if r.returncode != 0:
+        print("== 5/8 plan-shape watchdog ==", flush=True)
+        if not _pytest("plan audit", os.path.join(REPO, "tests", "test_plan_audit.py")):
             failures.append("plan-shape watchdog")
 
-    print("== 6/7 bench regression gate (vs median floor) ==", flush=True)
+    print("== 6/8 bench regression gate (vs median floor) ==", flush=True)
     if "--full-bench" in sys.argv:
         env = dict(
             os.environ,
@@ -180,20 +186,13 @@ def main() -> int:
     if r.returncode != 0:
         failures.append("bench regression gate")
 
-    print("== 7/7 slow capstone tests ==", flush=True)
-    r = subprocess.run(
-        [
-            sys.executable, "-m", "pytest", os.path.join(REPO, "tests"),
-            "-m", "slow", "-q", "--no-header", "-p", "no:cacheprovider",
-        ],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-    )
-    tail = [ln for ln in r.stdout.splitlines() if ln.strip()][-1:]
-    print(tail[0] if tail else "slow tests produced no output")
-    if r.returncode != 0:
+    print("== 7/8 slow capstone tests ==", flush=True)
+    if not _pytest("slow tests", os.path.join(REPO, "tests"), "-m", "slow"):
         failures.append("slow capstone tests")
+
+    print("== 8/8 perfbench self-tests ==", flush=True)
+    if not _pytest("perfbench self-tests", "perfbench"):
+        failures.append("perfbench self-tests")
 
     print("PREFLIGHT:", "FAIL " + ", ".join(failures) if failures else "OK")
     return 1 if failures else 0
