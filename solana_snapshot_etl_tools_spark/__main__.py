@@ -82,7 +82,11 @@ def main(argv: list[str] | None = None) -> int:
     from solana_snapshot_etl_tools_spark.operators import sinks as K
     from solana_snapshot_etl_tools_spark.operators.decoders import program_elfs_table
     from solana_snapshot_etl_tools_spark.plans import build_tables as BT
-    from solana_snapshot_etl_tools_spark.session import get_spark
+    from solana_snapshot_etl_tools_spark.session import (
+        checkpoint_for_session,
+        get_spark,
+        release_frame,
+    )
     from solana_snapshot_etl_tools_spark.sources.loader import load_snapshot
 
     from pyspark.sql import SparkSession
@@ -91,6 +95,11 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="snapshot-etl", cpus=args.cpus)
     work = args.work_dir or tempfile.mkdtemp(prefix="snapshot_etl_")
     raw = load_snapshot(spark, args.source, work)
+    if sum(map(bool, outputs)) > 1:
+        # every sink reads one decode of the archive, as the reference
+        # walks each AppendVec once for all of its outputs; the first
+        # sink's job fills the checkpoint
+        raw = checkpoint_for_session(raw, eager=False)
 
     report: dict[str, object] = {"source": args.source}
     if args.sqlite_out:
@@ -133,6 +142,7 @@ def main(argv: list[str] | None = None) -> int:
 
         raw.foreachPartition(push_native)
         report["geyser_so"] = {"lib": libpath, "config": cfg or None}
+    release_frame(raw)  # a no-op unless checkpointed above
     print(json.dumps(report))
     if not pre_existing:  # don't tear down a session we joined
         spark.stop()

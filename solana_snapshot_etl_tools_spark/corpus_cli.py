@@ -1072,7 +1072,7 @@ def main(argv: list[str] | None = None) -> int:
                         "belongs to the batch pipeline)")
         return _ingest_stream_main(args)
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
     from solana_snapshot_etl_tools_spark.functions import text as TXT
     from solana_snapshot_etl_tools_spark.functions.hashing import _2_32
@@ -1080,6 +1080,7 @@ def main(argv: list[str] | None = None) -> int:
     from solana_snapshot_etl_tools_spark.operators.sinks import write_training_shards
     from solana_snapshot_etl_tools_spark.session import (
         cache_for_session,
+        checkpoint_for_session,
         get_spark,
         release_session_caches,
     )
@@ -1308,6 +1309,12 @@ def main(argv: list[str] | None = None) -> int:
 
     kept = DD.exact_dedup(docs, "doc_id", "text")
     if args.near_dedup:
+        # the sketch, the shingle verify, the label init, the keep-id
+        # semi-join (and --dedup-prefer's re-join) all read this frame:
+        # without the checkpoint each re-reads DOCS and re-runs the
+        # normalize + md5 group-by. Lazy: the first job that reads it
+        # fills it
+        kept = checkpoint_for_session(kept, eager=False)
         pairs = DD.minhash_lsh_pairs(kept, "doc_id", "text")
         if args.dedup_prefer is not None:
             # keep-best survivor: the quality column is re-joined
@@ -1324,7 +1331,12 @@ def main(argv: list[str] | None = None) -> int:
             comp = DD.connected_components(pairs, kept, "doc_id")
         keep_ids = comp.filter(F.col("doc_id") == F.col("keep_id")).select("doc_id")
         kept = kept.join(keep_ids, "doc_id", "left_semi")
-    report["n_after_dedup"] = kept.count()
+    # counted by the first job that runs the chain below (a stage
+    # count, or the corpus persist job at the latest), not by a job
+    # of its own; the key keeps its place in the report
+    n_after_dedup = Observation("n_after_dedup")
+    kept = kept.observe(n_after_dedup, F.count(F.lit(1)).alias("n"))
+    report["n_after_dedup"] = None
 
     clean_col = (
         F.col("text") if args.no_pii else TXT.redact_pii(F.col("text"))
@@ -1420,6 +1432,7 @@ def main(argv: list[str] | None = None) -> int:
         split.alias("split"),
     ).persist()
     report["n_after_filters"] = corpus.count()
+    report["n_after_dedup"] = n_after_dedup.get["n"]
 
     # incremental shard ingestion: probe the prior corpus's persisted
     # index AFTER this shard is cleaned — both sides of the probe are

@@ -32,9 +32,16 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     fewer partitions — a small-file corpus (one parquet row group)
     otherwise runs CPU-heavy narrow maps (sketches, shingling) on a
     single core. At cluster scale a 100 TB scan already has far more
-    partitions than cores, so this is a no-op planning check; the
-    repartition only ever fires on inputs small enough that its
-    shuffle is trivial."""
+    partitions than cores; the repartition only ever fires on inputs
+    small enough that its shuffle is trivial.
+
+    The check itself is free only on a scan or a materialized (cached
+    or checkpointed) frame. On any other input ``df.rdd`` has to plan
+    the query, and under AQE that runs every shuffle stage of the
+    input just to count its partitions (two jobs, 1.9 s, for the MinHash
+    sketch's call on the corpus CLI's un-materialized exact-dedup
+    output: ``plans/r17/job_sites_corpus_before.log``, 4 vCPU). Callers
+    should hand it a scan or a materialized frame."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 from solana_snapshot_etl_tools_spark.operators import decoders as D
 from solana_snapshot_etl_tools_spark.session import (
     checkpoint_for_session,
+    is_session_checkpoint,
     release_frame,
 )
 
@@ -80,10 +81,15 @@ def build_tables(raw: DataFrame) -> dict[str, DataFrame]:
 def _shared_tables(raw: DataFrame):
     """:func:`build_tables` over one lazily checkpointed scan of
     ``raw`` and one checkpointed token dedup, both released when the
-    build ends."""
-    scan = checkpoint_for_session(raw, eager=False)
-    frames = [scan]
+    build ends. A ``raw`` that is already a session checkpoint (the
+    snapshot CLI's scan shared by several sinks) is read as it is and
+    left to its owner."""
+    frames = []
     try:
+        scan = raw
+        if not is_session_checkpoint(raw):
+            scan = checkpoint_for_session(raw, eager=False)
+            frames.append(scan)
         latest = checkpoint_for_session(D.token_latest(scan), eager=False)
         frames.append(latest)
         yield _tables(scan, latest)

@@ -196,6 +196,12 @@ def checkpoint_for_session(df: DataFrame, eager: bool = True) -> DataFrame:
     return df
 
 
+def is_session_checkpoint(df: DataFrame) -> bool:
+    """Whether ``df`` is a frame :func:`checkpoint_for_session`
+    returned that is not yet released."""
+    return any(isinstance(e, _CheckpointHandle) and e.df is df for e in _CACHES)
+
+
 def release_frame(df: DataFrame) -> None:
     """Free one registered frame now instead of at the next
     :func:`release_session_caches` (an iterative operator's superseded

@@ -59,9 +59,34 @@ def test_stage_runner_order_counts_and_caching(spark, monkeypatch):
         release_session_caches()
 
 
-def test_document_pipeline_end_to_end(spark, tmp_path_factory, capsys):
+def test_document_pipeline_end_to_end(spark, tmp_path_factory, capsys, monkeypatch):
+    """The near-dedup pipeline's report contract and shards; and the
+    dedup tier reads its input once: an identity mapInPandas over the
+    cleaned documents counts the rows every job pulls through it."""
+    sc = spark.sparkContext
+    read = sc.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            read.add(len(pdf))
+            yield pdf
+
+    clean_text = corpus_cli._clean_text
+
+    def counted(docs, args):
+        docs = clean_text(docs, args)
+        return docs.mapInPandas(count_rows, docs.schema)
+
+    monkeypatch.setattr(corpus_cli, "_clean_text", counted)
     out = str(tmp_path_factory.mktemp("corpus_docs"))
     rep = _run(capsys, SRC, out, "--near-dedup", "--records-per-shard", "100")
+    # one read for n_input's count, two inside exact_dedup's one plan
+    # (its min-id group-by and the semi-join's probe side). Every
+    # near-dedup consumer (the sketch, the shingle verify, the label
+    # init, the keep-id semi-join) and the corpus write read the
+    # checkpointed exact-dedup output instead, and n_after_dedup is
+    # observed on the corpus job, not counted by a job of its own
+    assert read.value == 3 * rep["n_input"]
     assert rep["n_input"] >= rep["n_after_dedup"] >= rep["n_after_filters"] > 0
     sizes = {k: v["rows"] for k, v in rep["splits"].items()}
     assert sum(sizes.values()) == rep["n_after_filters"]

@@ -249,15 +249,8 @@ def test_bank_prefixed_archive_end_to_end(spark, tmp_path, raw_accounts):
     _assert_same_accounts(spark, scanned, raw_accounts)
 
 
-def test_cli_end_to_end(spark, tmp_path):
-    """The reference binary's UX: one archive in, snapshot.db + CSV
-    out, via `python -m solana_snapshot_etl_tools_spark` (in-process
-    main; the CLI must not tear down a session it joined)."""
-    import sqlite3
-
-    from solana_snapshot_etl_tools_spark.__main__ import main
-    from solana_snapshot_etl_tools_spark.fixtures import build_fixture as BF
-
+def _write_cli_archive(tmp_path) -> str:
+    """The fixture as a snapshot .tar the CLI takes as its source."""
     accounts_dir, manifest = _write_snapshot_dir(str(tmp_path))
     slot = max(s for s, _ in manifest)
     tar_path = str(tmp_path / "snap_cli.tar")
@@ -268,6 +261,19 @@ def test_cli_end_to_end(spark, tmp_path):
         tf.add(mpath, arcname=f"snapshots/{slot}/{slot}")
         for name in sorted(os.listdir(accounts_dir)):
             tf.add(os.path.join(accounts_dir, name), arcname=f"accounts/{name}")
+    return tar_path
+
+
+def test_cli_end_to_end(spark, tmp_path):
+    """The reference binary's UX: one archive in, snapshot.db + CSV
+    out, via `python -m solana_snapshot_etl_tools_spark` (in-process
+    main; the CLI must not tear down a session it joined)."""
+    import sqlite3
+
+    from solana_snapshot_etl_tools_spark.__main__ import main
+    from solana_snapshot_etl_tools_spark.fixtures import build_fixture as BF
+
+    tar_path = _write_cli_archive(tmp_path)
     import shutil
 
     db = str(tmp_path / "out.db")
@@ -321,3 +327,42 @@ def test_tar_zst_archive_scan(spark, tmp_path, raw_accounts):
         fout.write(fin.read())
     scanned = SNAP.scan_archive(spark, zst_path, str(tmp_path / "work_zst"))
     _assert_same_accounts(spark, scanned, raw_accounts)
+
+
+def test_cli_sinks_share_one_scan(spark, tmp_path, monkeypatch):
+    """Several output flags decode the archive once, as the reference
+    walks each AppendVec once for all of its outputs: an identity
+    mapInPandas over the loaded frame counts the rows every job pulls
+    through it. A CLI that handed each sink its own scan would count
+    3x the raw rows here (one scan per build, one for the CSV). The
+    shared scan is released before the CLI returns."""
+    from solana_snapshot_etl_tools_spark.__main__ import main
+    from solana_snapshot_etl_tools_spark.sources import loader
+
+    sc = spark.sparkContext
+    scanned = sc.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            scanned.add(len(pdf))
+            yield pdf
+
+    load = loader.load_snapshot
+
+    def counted_load(*args, **kwargs):
+        raw = load(*args, **kwargs)
+        return raw.mapInPandas(count_rows, raw.schema)
+
+    monkeypatch.setattr(loader, "load_snapshot", counted_load)
+    tar_path = _write_cli_archive(tmp_path)
+    persisted = sc._jsc.getPersistentRDDs().size()
+    rc = main(
+        [tar_path, "--sqlite-out", str(tmp_path / "out.db"),
+         "--parquet-out", str(tmp_path / "tables"),
+         "--csv-out", str(tmp_path / "csv"),
+         "--work-dir", str(tmp_path / "wk")]
+    )
+    assert rc == 0
+    # raw.count(): every raw record of the archive, before any dedup
+    assert scanned.value == len(build_fixture()["raw_rows"])
+    assert sc._jsc.getPersistentRDDs().size() == persisted
